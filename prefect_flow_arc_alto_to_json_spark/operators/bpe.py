@@ -241,9 +241,10 @@ def unigram_viterbi(
     rational — boundary hits measure-zero, the Adamic-Adar discipline);
     the DP then runs in INTEGER cost space, so both engines walk the
     same lattice. Viterbi ties break on (cost, start-of-last-piece):
-    equal-cost candidates prefer the LONGEST final piece; the
-    (word, pos) level relation makes the tie-break a ROW_NUMBER, never a
-    struct-min.
+    equal-cost candidates prefer the LONGEST final piece. Each level's
+    argmin is a struct-min (``array_min`` over (cost, j, ...) structs);
+    (cost, j) already identifies a candidate, so it picks the same row
+    as the former ROW_NUMBER OVER (ORDER BY cost, j).
 
     The DP is unrolled as ``max_word_len`` bounded levels (the corpus
     max is 8 chars; raise the constant for longer-tailed corpora — words

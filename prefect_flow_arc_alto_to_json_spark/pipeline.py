@@ -103,12 +103,16 @@ def run_pipeline(
     transcript_url_conn_factory=None,
     objects_client_factory=None,
 ) -> dict[str, int]:
-    """Execute the full flow. Returns row counts per outcome.
+    """Execute the full flow. Returns row counts per outcome
+    (``processed``, ``failed``).
 
     Sink order mirrors the reference (S3 object, then UPDATE, then INSERT);
     failed fetches/parses are quarantined, not fatal (unlike the
     reference, where one bad file fails its whole task chain :59-63 — at
-    100 TB that policy would be unusable).
+    100 TB that policy would be unusable). The first sink runs the fused
+    scan → fetch → parse job and fills the cache; after the sinks, ONE
+    aggregate over the cached result yields both outcome counts and
+    max(updated_at), which is saved as the watermark.
     """
     store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
     since = store.load() if store else None
@@ -116,12 +120,8 @@ def run_pipeline(
     work = catalog_scan(spark, cfg.catalog_dir, since, cfg.full_sync)
     result = transform(work, cfg).cache()
     try:
-        ok = result.where(
-            F.col("fetch_error").isNull() & F.col("alto_error").isNull()
-        )
-        failed = result.where(
-            F.col("fetch_error").isNotNull() | F.col("alto_error").isNotNull()
-        )
+        is_ok = F.col("fetch_error").isNull() & F.col("alto_error").isNull()
+        ok = result.where(is_ok)
 
         write_json_objects(
             ok,
@@ -159,13 +159,11 @@ def run_pipeline(
                 param_cols=["representation_id", "schema_transcript_url"],
             )
 
-        counts = {
-            "processed": ok.count(),
-            "failed": failed.count(),
-        }
-        max_updated = result.agg(F.max("updated_at")).first()[0]
+        processed, failed, max_updated = result.agg(
+            F.count_if(is_ok), F.count_if(~is_ok), F.max("updated_at")
+        ).first()
         if store is not None and max_updated is not None:
             store.save(max_updated)
-        return counts
+        return {"processed": processed, "failed": failed}
     finally:
         result.unpersist()

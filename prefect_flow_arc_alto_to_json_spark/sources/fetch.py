@@ -5,11 +5,20 @@ with bounded per-executor concurrency).
 Failure model follows the 100 TB rule (SURVEY.md §7.4.5): a bad URL must
 never kill the job. Each row gets either ``body`` or ``fetch_error`` — the
 Spark twin of the reference's per-task exception capture
-(flows/main_flow.py:59-63), but non-fatal and set-oriented. Three layers
-enforce it:
+(flows/main_flow.py:59-63), but non-fatal and set-oriented. Errors come in
+two kinds:
 
-- transient failures are retried with exponential backoff (``retries``,
-  ``backoff_s``) inside the worker, so a blip never surfaces as a lost row;
+- FINAL errors answer the same way on every attempt, so the first answer
+  is the row's result: an HTTP 4xx other than 408/425/429, a missing
+  ``file://`` or bare path, a null URL. The transport marks the first
+  two by returning a :class:`FinalError`.
+- every other error is TRANSIENT and is retried with exponential backoff
+  (``retries``, ``backoff_s``) inside the worker: connection and timeout
+  errors, HTTP 5xx, HTTP 408/425/429. An injected fetcher's errors are
+  transient unless it returns a :class:`FinalError`.
+
+Two more layers keep a slow origin from stalling the stage:
+
 - in-flight fetches per worker are clamped to ``max_concurrency`` (one
   bounded thread pool per partition iterator), so a slow origin cannot
   pile up unbounded sockets;
@@ -19,27 +28,41 @@ enforce it:
   abandoned thread is left to the worker's lifecycle — the stage itself
   always completes.
 
+Rows leave ``fetch_urls`` in COMPLETION order, not input order, so the
+parse downstream starts on the first documents while the slow ones (and
+their retries) are still in flight.
+
 Supported schemes: ``http(s)://`` via urllib (stdlib — no extra deps) and
 ``file://`` / bare paths for local corpora and tests.
 """
 
 from __future__ import annotations
 
+import contextlib
+import queue
 import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FutureTimeoutError
+from urllib.error import HTTPError
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Result columns appended by fetch_urls.
-FETCH_RESULT_FIELDS = "body string, fetch_error string"
-
 #: (url, timeout_s) -> (body, error) — injectable for tests.
 Fetcher = Callable[[str, float], tuple[str | None, str | None]]
+
+#: HTTP statuses besides 5xx that a second attempt can change: request
+#: timeout, too early, too many requests.
+_RETRY_STATUSES = frozenset({408, 425, 429})
+
+
+class FinalError(str):
+    """A fetch error no second attempt can change (a 404, a missing file).
+    A fetcher returns it in place of a plain ``str`` error; ``fetch_urls``
+    then keeps the first answer instead of retrying."""
 
 
 def _fetch_one(url: str, timeout: float) -> tuple[str | None, str | None]:
@@ -58,6 +81,13 @@ def _fetch_one(url: str, timeout: float) -> tuple[str | None, str | None]:
         # bare local path
         with open(url, encoding="utf-8") as f:
             return f.read(), None
+    except HTTPError as exc:
+        err = f"{type(exc).__name__}: {exc}"
+        if exc.code >= 500 or exc.code in _RETRY_STATUSES:
+            return None, err
+        return None, FinalError(err)
+    except FileNotFoundError as exc:
+        return None, FinalError(f"{type(exc).__name__}: {exc}")
     except Exception as exc:  # noqa: BLE001 — error column, never task death
         return None, f"{type(exc).__name__}: {exc}"
 
@@ -77,17 +107,29 @@ def fetch_urls(
     """Fetch every row's URL, appending ``body_col`` / ``error_col``.
 
     Scale: ``repartition(partitions)`` controls total fan-out (e.g. 1000
-    executors x 8 concurrent GETs); within a partition a thread pool hides
-    latency while the Arrow batch keeps serialization cheap. Stragglers are
-    bounded by ``timeout_s`` AND a per-row hard deadline (all retry
-    attempts + backoff + ``timeout_s`` margin) enforced from outside the
-    fetch thread — a fetch that ignores its timeout still resolves to an
-    error row, never a stalled stage.
+    executors x 8 concurrent GETs); within a partition a thread pool of
+    ``max_concurrency`` hides latency while Arrow batches keep
+    serialization cheap.
 
-    ``retries``/``backoff_s``: each failed attempt (other than a null URL)
-    is retried after ``backoff_s * 2**attempt`` seconds; the final error
-    string records the attempt count so flaky origins are visible in the
-    error column, not hidden by the retry.
+    Output order: rows are emitted as their fetches complete, so the plan
+    downstream (parse, JSON, sinks) works on early rows while slow ones
+    are still in flight. Row order is NOT part of the contract; each row
+    keeps its own input columns.
+
+    Failures: a transient error (connection or timeout, HTTP 5xx, HTTP
+    408/425/429, any plain-``str`` error of an injected fetcher) is
+    retried up to ``retries`` times after ``backoff_s * 2**attempt``
+    seconds, and the error string then records the attempt count, so
+    flaky origins stay visible in the error column. A :class:`FinalError`
+    (any other HTTP 4xx, a missing ``file://`` or bare path) and a null
+    URL are the row's result at the first answer.
+
+    Stragglers are bounded by ``timeout_s`` AND a per-row hard deadline
+    (all retry attempts + backoff + ``timeout_s`` margin) enforced from
+    outside the fetch thread against the oldest unfinished row, counted
+    from when the row before it finished or was abandoned — the clock a
+    batch-ordered wait gives it. A fetch that ignores its timeout still
+    resolves to a ``FetchDeadlineExceeded`` row, never a stalled stage.
 
     ``fetcher`` swaps the transport for tests (fault injection); production
     callers leave the stdlib default.
@@ -104,12 +146,17 @@ def fetch_urls(
     # hard per-row deadline: every attempt at its full timeout, all
     # backoff sleeps, plus one timeout_s of margin for scheduling
     hard_deadline = (retries + 1) * timeout_s + total_backoff + timeout_s
+    deadline_row = (
+        None,
+        f"FetchDeadlineExceeded: no result within {hard_deadline:.1f}s hard deadline",
+    )
 
     def fetch_with_retry(url: str) -> tuple[str | None, str | None]:
         attempt = 0
         while True:
             body, err = fetch(url, timeout_s)
-            if err is None or url is None or attempt >= retries:
+            settled = err is None or url is None or isinstance(err, FinalError)
+            if settled or attempt >= retries:
                 if err is not None and attempt > 0:
                     err = f"{err} (after {attempt + 1} attempts)"
                 return body, err
@@ -118,25 +165,47 @@ def fetch_urls(
 
     def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pool = ThreadPoolExecutor(max_workers=max_concurrency)
+        done: queue.SimpleQueue = queue.SimpleQueue()
+        # future -> (input batch, row position), oldest first
+        pending: dict = {}
+        batches: Iterator[pd.DataFrame] | None = iter(it)
+        head, head_since = None, 0.0
         try:
-            for pdf in it:
-                futs = [pool.submit(fetch_with_retry, u) for u in pdf[url_col]]
-                results = []
-                for f in futs:
-                    try:
-                        results.append(f.result(timeout=hard_deadline))
-                    except FutureTimeoutError:
-                        results.append(
-                            (
-                                None,
-                                "FetchDeadlineExceeded: no result within "
-                                f"{hard_deadline:.1f}s hard deadline",
-                            )
-                        )
-                pdf = pdf.copy()
-                pdf[body_col] = [r[0] for r in results]
-                pdf[error_col] = [r[1] for r in results]
-                yield pdf
+            while True:
+                # read ahead one batch whenever the pool could run dry
+                while batches is not None and len(pending) <= max_concurrency:
+                    pdf = next(batches, None)
+                    if pdf is None:
+                        batches = None
+                        break
+                    for i, u in enumerate(pdf[url_col]):
+                        fut = pool.submit(fetch_with_retry, u)
+                        pending[fut] = (pdf, i)
+                        fut.add_done_callback(done.put)
+                if not pending:
+                    return
+                oldest = next(iter(pending))
+                if oldest is not head:
+                    head, head_since = oldest, time.monotonic()
+                finished = []
+                with contextlib.suppress(queue.Empty):
+                    wait_s = head_since + hard_deadline - time.monotonic()
+                    finished.append(done.get(timeout=max(wait_s, 0.0)))
+                    while True:
+                        finished.append(done.get_nowait())
+                # an abandoned row's thread may still finish: its row is out
+                results = {f: f.result() for f in finished if f in pending}
+                if head not in results and time.monotonic() >= head_since + hard_deadline:
+                    results[head] = deadline_row
+                parts: dict[int, tuple] = {}
+                for f, (body, err) in results.items():
+                    pdf, i = pending.pop(f)
+                    part = parts.setdefault(id(pdf), (pdf, [], [], []))
+                    part[1].append(i)
+                    part[2].append(body)
+                    part[3].append(err)
+                for pdf, rows, bodies, errs in parts.values():
+                    yield pdf.iloc[rows].assign(**{body_col: bodies, error_col: errs})
         finally:
             # never wait: a hung fetch thread must not block the stage.
             pool.shutdown(wait=False, cancel_futures=True)
@@ -289,19 +358,6 @@ def fetch_urls_polite(
                 pool.shutdown(wait=False, cancel_futures=True)
 
     return df.mapInPandas(fetch_batches, schema=out_schema)
-
-
-def read_local_xml_dir(spark, path: str) -> DataFrame:
-    """Directory-of-XML scan for local corpora: ``binaryFile`` source gives
-    (path, modificationTime, length, content) with partition-parallel reads;
-    decode to text. Alternative head of the pipeline when documents are
-    already on shared storage instead of behind HTTP."""
-    raw = spark.read.format("binaryFile").option("pathGlobFilter", "*.xml").load(path)
-    return raw.select(
-        F.col("path").alias("premis_stored_at"),
-        F.decode("content", "UTF-8").alias("body"),
-        F.lit(None).cast("string").alias("fetch_error"),
-    )
 
 
 from ..functions.selfship import self_ship  # noqa: E402

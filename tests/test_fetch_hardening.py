@@ -2,15 +2,22 @@
 per-worker in-flight clamp, and the hard per-row deadline that makes a
 hanging URL provably unable to fail the stage (SURVEY §7.4 risk 5).
 
-All faults are injected through fetch_urls' ``fetcher`` parameter — no
-network. State that must survive across retry attempts (attempt counters,
-the in-flight gauge) lives in a mutable default argument: it is pickled
-empty with the closure and materializes per Python worker, which is
-exactly the scope the assertions need (retries happen in the worker that
-owns the row; the clamp is a per-worker bound)."""
+Most faults are injected through fetch_urls' ``fetcher`` parameter. State
+that must survive across retry attempts (attempt counters, the in-flight
+gauge) lives in a mutable default argument: it is pickled empty with the
+closure and materializes per Python worker, which is exactly the scope the
+assertions need (retries happen in the worker that owns the row; the clamp
+is a per-worker bound). The default transport's final-vs-transient
+classification runs against a real HTTP origin on 127.0.0.1 (no network
+beyond the loopback interface)."""
 
 from __future__ import annotations
 
+import threading
+import time
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+import pytest
 from pyspark.sql import functions as F
 
 from prefect_flow_arc_alto_to_json_spark.sources.fetch import fetch_urls
@@ -104,14 +111,19 @@ def _hanging_fetcher(url, timeout):
     half-open socket). Only the hard deadline can bound this."""
     import time as _time
 
-    if url.endswith("/0"):
+    if url.endswith(("/0", "/3")):
         _time.sleep(30)
         return "late", None
     return f"body-of-{url}", None
 
 
 def test_fetch_hanging_url_cannot_stall_the_stage(spark):
+    """Two hung rows: the first is abandoned one hard deadline after the
+    stage starts, the second one deadline after that (its clock starts
+    when the row before it resolved), while the healthy rows stream out
+    in between. The stage never waits for the 30 s sleeps."""
     df = _urls_df(spark, 6)
+    t0 = time.monotonic()
     out = fetch_urls(
         df,
         url_col="url",
@@ -120,13 +132,152 @@ def test_fetch_hanging_url_cannot_stall_the_stage(spark):
         timeout_s=0.3,  # hard deadline = 2 * 0.3 = 0.6s per row
         max_concurrency=4,
     ).collect()
+    elapsed = time.monotonic() - t0
+    assert len(out) == 6
     by_url = {r["url"]: r for r in out}
-    hung = by_url["synthetic://doc/0"]
-    assert hung["body"] is None
-    assert "FetchDeadlineExceeded" in hung["fetch_error"]
-    others = [r for u, r in by_url.items() if not u.endswith("/0")]
-    assert len(others) == 5
-    assert all(r["fetch_error"] is None and r["body"] for r in others)
+    for u in ("synthetic://doc/0", "synthetic://doc/3"):
+        assert by_url[u]["body"] is None
+        assert "FetchDeadlineExceeded" in by_url[u]["fetch_error"]
+    others = [r for u, r in by_url.items() if not u.endswith(("/0", "/3"))]
+    assert len(others) == 4
+    assert all(r["fetch_error"] is None and r["body"] == f"body-of-{r['url']}" for r in others)
+    assert elapsed < 20.0, elapsed
+
+
+def _reversing_fetcher(url, timeout):
+    """Row i of 12 sleeps (12 - i) * 50 ms: completion order is the
+    reverse of input order."""
+    import time as _time
+
+    i = int(url.rsplit("/", 1)[1])
+    _time.sleep((12 - i) * 0.05)
+    return f"body-of-{url}", None
+
+
+def test_fetch_streams_rows_in_completion_order(spark):
+    """Rows leave in completion order across several input Arrow batches,
+    and every row keeps its own URL-body pairing: none lost, none
+    duplicated."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")  # 12 rows arrive as 3 input batches
+    try:
+        out = fetch_urls(
+            _urls_df(spark, 12),
+            url_col="url",
+            fetcher=_reversing_fetcher,
+            retries=0,
+            max_concurrency=12,
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    urls = [r["url"] for r in out]
+    assert sorted(urls) == sorted(f"synthetic://doc/{i}" for i in range(12))
+    assert all(r["fetch_error"] is None and r["body"] == f"body-of-{r['url']}" for r in out)
+    # row 0 sleeps longest: a batch-ordered fetch would emit it first
+    assert urls[0] != "synthetic://doc/0", urls
+
+
+class _FaultOrigin:
+    """Local HTTP origin on an ephemeral 127.0.0.1 port. Counts GETs per
+    path and answers by path prefix: ``/missing/`` 404, ``/flaky/`` 503
+    then 200, ``/throttled/`` 429 then 200, anything else 200."""
+
+    def __init__(self) -> None:
+        self.gets: dict[str, int] = {}
+        self.lock = threading.Lock()
+        origin = self
+
+        class Handler(BaseHTTPRequestHandler):
+            def log_message(self, *args) -> None:
+                pass
+
+            def do_GET(self) -> None:  # noqa: N802
+                with origin.lock:
+                    n = origin.gets[self.path] = origin.gets.get(self.path, 0) + 1
+                status = 200
+                if self.path.startswith("/missing/"):
+                    status = 404
+                elif self.path.startswith("/flaky/") and n == 1:
+                    status = 503
+                elif self.path.startswith("/throttled/") and n == 1:
+                    status = 429
+                body = f"<alto>{self.path}</alto>".encode() if status == 200 else b""
+                self.send_response(status)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+        self.server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.url = f"http://127.0.0.1:{self.server.server_address[1]}"
+        self.thread = threading.Thread(target=self.server.serve_forever, daemon=True)
+        self.thread.start()
+
+    def close(self) -> None:
+        self.server.shutdown()
+        self.server.server_close()
+        self.thread.join()
+
+
+@pytest.fixture()
+def origin():
+    o = _FaultOrigin()
+    yield o
+    o.close()
+
+
+def _fetch_http(spark, origin, path: str):
+    df = spark.createDataFrame([(origin.url + path,)], "url string")
+    (row,) = fetch_urls(df, url_col="url", retries=2, backoff_s=0.01, timeout_s=5.0).collect()
+    return row
+
+
+def test_http_404_is_final_at_first_answer(spark, origin):
+    row = _fetch_http(spark, origin, "/missing/a.xml")
+    assert origin.gets == {"/missing/a.xml": 1}
+    assert row["body"] is None
+    assert row["fetch_error"].startswith("HTTPError: HTTP Error 404")
+    assert "attempts)" not in row["fetch_error"]
+
+
+def test_http_503_is_retried_and_recovers(spark, origin):
+    row = _fetch_http(spark, origin, "/flaky/b.xml")
+    assert origin.gets == {"/flaky/b.xml": 2}
+    assert row["fetch_error"] is None
+    assert row["body"] == "<alto>/flaky/b.xml</alto>"
+
+
+def test_http_429_is_retried_and_recovers(spark, origin):
+    row = _fetch_http(spark, origin, "/throttled/c.xml")
+    assert origin.gets == {"/throttled/c.xml": 2}
+    assert row["fetch_error"] is None
+    assert row["body"] == "<alto>/throttled/c.xml</alto>"
+
+
+def test_missing_file_is_final_at_first_answer(spark, tmp_path):
+    df = spark.createDataFrame([(f"file://{tmp_path}/absent.xml",)], "url string")
+    t0 = time.monotonic()
+    # a retried row would sleep 2 s + 4 s of backoff before giving up
+    (row,) = fetch_urls(df, url_col="url", retries=2, backoff_s=2.0).collect()
+    assert time.monotonic() - t0 < 6.0
+    assert row["body"] is None
+    assert row["fetch_error"].startswith("FileNotFoundError")
+    assert "attempts)" not in row["fetch_error"]
+
+
+def test_injected_fetcher_final_error_is_not_retried(spark):
+    """An injected fetcher's errors stay retryable unless it returns a
+    FinalError."""
+    from prefect_flow_arc_alto_to_json_spark.sources.fetch import FinalError
+
+    def fetcher(url, timeout, _state={}):  # noqa: B006 — per-worker state
+        _state[url] = _state.get(url, 0) + 1
+        return None, FinalError(f"Gone: attempt {_state[url]}")
+
+    out = fetch_urls(
+        _urls_df(spark, 3), url_col="url", fetcher=fetcher, retries=2, backoff_s=0.01
+    ).collect()
+    assert sorted(r["fetch_error"] for r in out) == ["Gone: attempt 1"] * 3
 
 
 def test_polite_fetch_paces_within_host(spark):
