@@ -28,9 +28,9 @@ Two more layers keep a slow origin from stalling the stage:
   abandoned thread is left to the worker's lifecycle — the stage itself
   always completes.
 
-Rows leave ``fetch_urls`` in COMPLETION order, not input order, so the
-parse downstream starts on the first documents while the slow ones (and
-their retries) are still in flight.
+Rows leave ``fetch_urls`` in COMPLETION order within each input batch,
+not input order, so the parse downstream starts on the first documents
+while the slow ones (and their retries) are still in flight.
 
 Supported schemes: ``http(s)://`` via urllib (stdlib — no extra deps) and
 ``file://`` / bare paths for local corpora and tests.
@@ -111,10 +111,12 @@ def fetch_urls(
     ``max_concurrency`` hides latency while Arrow batches keep
     serialization cheap.
 
-    Output order: rows are emitted as their fetches complete, so the plan
-    downstream (parse, JSON, sinks) works on early rows while slow ones
-    are still in flight. Row order is NOT part of the contract; each row
-    keeps its own input columns.
+    Output order: within each input Arrow batch, rows are emitted as their
+    fetches complete, so the plan downstream (parse, JSON, sinks) works on
+    early rows while slow ones are still in flight; the next input batch
+    is submitted once every row of the current one has resolved. Row
+    order is NOT part of the contract; each row keeps its own input
+    columns.
 
     Failures: a transient error (connection or timeout, HTTP 5xx, HTTP
     408/425/429, any plain-``str`` error of an injected fetcher) is
@@ -165,47 +167,37 @@ def fetch_urls(
 
     def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pool = ThreadPoolExecutor(max_workers=max_concurrency)
-        done: queue.SimpleQueue = queue.SimpleQueue()
-        # future -> (input batch, row position), oldest first
-        pending: dict = {}
-        batches: Iterator[pd.DataFrame] | None = iter(it)
-        head, head_since = None, 0.0
         try:
-            while True:
-                # read ahead one batch whenever the pool could run dry
-                while batches is not None and len(pending) <= max_concurrency:
-                    pdf = next(batches, None)
-                    if pdf is None:
-                        batches = None
-                        break
-                    for i, u in enumerate(pdf[url_col]):
-                        fut = pool.submit(fetch_with_retry, u)
-                        pending[fut] = (pdf, i)
-                        fut.add_done_callback(done.put)
-                if not pending:
-                    return
-                oldest = next(iter(pending))
-                if oldest is not head:
-                    head, head_since = oldest, time.monotonic()
-                finished = []
-                with contextlib.suppress(queue.Empty):
-                    wait_s = head_since + hard_deadline - time.monotonic()
-                    finished.append(done.get(timeout=max(wait_s, 0.0)))
-                    while True:
-                        finished.append(done.get_nowait())
-                # an abandoned row's thread may still finish: its row is out
-                results = {f: f.result() for f in finished if f in pending}
-                if head not in results and time.monotonic() >= head_since + hard_deadline:
-                    results[head] = deadline_row
-                parts: dict[int, tuple] = {}
-                for f, (body, err) in results.items():
-                    pdf, i = pending.pop(f)
-                    part = parts.setdefault(id(pdf), (pdf, [], [], []))
-                    part[1].append(i)
-                    part[2].append(body)
-                    part[3].append(err)
-                for pdf, rows, bodies, errs in parts.values():
-                    yield pdf.iloc[rows].assign(**{body_col: bodies, error_col: errs})
+            for pdf in it:
+                done: queue.SimpleQueue = queue.SimpleQueue()
+                pending: dict = {}  # future -> row position, oldest first
+                for i, u in enumerate(pdf[url_col]):
+                    fut = pool.submit(fetch_with_retry, u)
+                    pending[fut] = i
+                    fut.add_done_callback(done.put)
+                head, head_since = None, 0.0
+                while pending:
+                    oldest = next(iter(pending))
+                    if oldest is not head:
+                        head, head_since = oldest, time.monotonic()
+                    finished = []
+                    with contextlib.suppress(queue.Empty):
+                        wait_s = head_since + hard_deadline - time.monotonic()
+                        finished.append(done.get(timeout=max(wait_s, 0.0)))
+                        while True:
+                            finished.append(done.get_nowait())
+                    # an abandoned row's thread may still finish: its row is out
+                    results = {f: f.result() for f in finished if f in pending}
+                    if head not in results and time.monotonic() >= head_since + hard_deadline:
+                        results[head] = deadline_row
+                    if results:
+                        rows = [pending.pop(f) for f in results]
+                        yield pdf.iloc[rows].assign(
+                            **{
+                                body_col: [r[0] for r in results.values()],
+                                error_col: [r[1] for r in results.values()],
+                            }
+                        )
         finally:
             # never wait: a hung fetch thread must not block the stage.
             pool.shutdown(wait=False, cancel_futures=True)
