@@ -6,11 +6,18 @@ decode UDFs) runs on one core no matter how many the session has. At real
 scale the source has many files/row-groups and these guards are no-ops;
 they only repartition when upstream parallelism is below the session
 default — i.e. exactly the small-input case where a shuffle is cheap.
+
+A session conf change that must last only for a block goes through
+:func:`scoped_conf`; loop parallelism goes through
+:func:`loop_shuffle_partitions`, which holds the one shrink rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator
+from contextlib import AbstractContextManager, contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: Last persisted relation per call-site tag (see :func:`scoped_persist`).
 _PERSIST_REGISTRY: dict[str, DataFrame] = {}
@@ -245,3 +252,52 @@ def loop_rounds(n: int) -> int:
     under AUDIT_ITERATION_MODE (the audit wants one representative round
     body, not an n-times-unrolled static plan)."""
     return 1 if AUDIT_ITERATION_MODE else n
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str | None) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the ``with`` block only.
+
+    The key is set on entry; on exit — normal or by exception — the
+    previous value is restored, or the key is UNSET if it was never set
+    (``conf.get(key, None)`` is None then, and writing the effective
+    default back would leave an explicit override in the session that
+    the next query inherits). ``value=None`` leaves the session untouched,
+    so callers whose rule decides "no change" need no branch.
+    """
+    if value is None:
+        yield
+        return
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def loop_shuffle_partitions(
+    spark: SparkSession, n_rows: int
+) -> AbstractContextManager[None]:
+    """Shrink ``spark.sql.shuffle.partitions`` for an iterative loop whose
+    per-round relations hold about ``n_rows`` rows: a ``with`` block under
+    :func:`scoped_conf`.
+
+    On small loop states each round's cost is task scheduling (one task
+    per shuffle partition, two or more shuffles a round), not data, so
+    below 50,000 rows per current partition the loop runs on
+    ``max(4, min(current, n_rows // 50_000 + 4))`` partitions; larger
+    states keep the session value and the block changes nothing. Callers
+    size ``n_rows`` from a relation that is already materialized, and
+    every relation the loop leaves behind must be materialized (checkpoint
+    or driver action) inside the block — a lazy plan that escapes it
+    would run under the restored setting.
+    """
+    current = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shrunk = None
+    if n_rows < 50_000 * current:
+        shrunk = str(max(4, min(current, n_rows // 50_000 + 4)))
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", shrunk)

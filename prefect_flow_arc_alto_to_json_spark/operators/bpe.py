@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import token_array
+from ..functions.scale import loop_shuffle_partitions
 
 #: Pair-key separator (symbols are word characters/concatenations and
 #: never contain control characters).
@@ -121,29 +122,11 @@ def _bpe_train_loop(
     spark, vocab0: DataFrame, k: int
 ) -> tuple[DataFrame, DataFrame]:
     vocab = vocab0.localCheckpoint()
-    # Size-adaptive loop parallelism (round-14; the dedup_components /
-    # q_stable_matching precedent): the corpus pass above keeps full
-    # parallelism, but every loop relation is VOCABULARY-sized, so on
-    # small vocabularies the k merge steps cost mostly task scheduling
-    # (32 shuffle partitions x pair-count agg x steps for a few thousand
-    # rows). vocab is just materialized — sizing it is one cheap count;
-    # big vocabularies keep the session default (the 100 TB path
-    # unchanged). Restore is safe: every loop relation is EAGERLY
-    # checkpointed inside the window (top via its ckpt + isEmpty, vocab
-    # via its ckpt), so nothing lazy escapes.
-    n_vocab = vocab.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    shrunk = n_vocab < 50_000 * int(prev_sp)
-    if shrunk:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(int(prev_sp), n_vocab // 50_000 + 4))),
-        )
-    try:
+    # Every loop relation is vocabulary-sized. Restoring the setting after
+    # the loop is safe: each is eagerly checkpointed inside the block (top
+    # via its checkpoint + isEmpty, vocab via its checkpoint).
+    with loop_shuffle_partitions(spark, vocab.count()):
         return _bpe_merge_steps(spark, vocab, k)
-    finally:
-        if shrunk:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 def _bpe_merge_steps(

@@ -28,6 +28,7 @@ from ..functions.scale import (
     fan_out,
     loop_ckpt_lazy,
     loop_rounds,
+    loop_shuffle_partitions,
     scoped_persist,
 )
 
@@ -749,24 +750,10 @@ def duplicate_components(
         .distinct()
         .persist()
     )
-    # Size-adaptive iteration parallelism: the per-round cost of this loop
-    # at small edge counts is SCHEDULING (32 shuffle partitions x 2 jobs x
-    # rounds for a few hundred rows — measured 3.1s -> 1.7s at sf0.1 with 4
-    # partitions). The edge relation is already persisted, so sizing it is
-    # one cheap count; big edge sets keep the session default untouched —
-    # the 100 TB path is unchanged.
-    spark = pairs.sparkSession
-    n_edges = edges.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if n_edges < 50_000 * int(prev_sp):
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(int(prev_sp), n_edges // 50_000 + 4))),
-        )
-    try:
+    # Restoring the setting after the loop is safe: every round's lazy
+    # checkpoint is materialized by that round's changed-count collect.
+    with loop_shuffle_partitions(pairs.sparkSession, edges.count()):
         labels = _propagate_min_labels(edges, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     edges.unpersist()
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("component_id")
@@ -775,7 +762,7 @@ def duplicate_components(
 
 def _propagate_min_labels(edges: DataFrame, max_iter: int) -> DataFrame:
     """The eager min-label loop of :func:`duplicate_components` (runs under
-    the adaptive shuffle-partition setting chosen by its caller)."""
+    its caller's :func:`loop_shuffle_partitions` block)."""
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

@@ -23,7 +23,7 @@ per-file serialization, :136-153) disappears into partition parallelism.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,9 +43,6 @@ class PipelineConfig:
     s3_bucket: str = "alto-json"
     watermark_dir: str | None = None
     full_sync: bool = False
-    fetch_partitions: int | None = None
-    fetch_concurrency: int = 8
-    extra: dict = field(default_factory=dict)
 
 
 def catalog_scan(
@@ -72,12 +69,7 @@ def catalog_scan(
 
 def transform(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """fetch → parse → simplify → transcript → keys/urls, still lazy."""
-    fetched = fetch_urls(
-        df,
-        url_col="premis_stored_at",
-        max_concurrency=cfg.fetch_concurrency,
-        partitions=cfg.fetch_partitions,
-    )
+    fetched = fetch_urls(df, url_col="premis_stored_at")
     simplified = simplify_alto(fetched, xml_col="body")
     return simplified.select(
         "representation_id",

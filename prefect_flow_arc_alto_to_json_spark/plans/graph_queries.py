@@ -2452,7 +2452,11 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..functions import scale as _scale
-    from ..functions.scale import loop_ckpt_counted, loop_rounds
+    from ..functions.scale import (
+        loop_ckpt_counted,
+        loop_rounds,
+        loop_shuffle_partitions,
+    )
 
     # (p, a, prk, ark): each list entry with BOTH ranks attached, for the
     # batch-rejection prune below.
@@ -2460,23 +2464,6 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["p", "a", "prk", "ark"]
     eng = prar.where(F.lit(False))
-
-    # Size-adaptive loop parallelism (the dedup_components precedent,
-    # round-14): every per-round relation is bounded by |prar| (the
-    # truncated preference lists), so on small markets the ~9 rounds'
-    # cost is pure task scheduling — 32 shuffle partitions x 2 aggs x
-    # rounds for a few hundred rows (measured 4.9 -> 3.0 s at sf0.1 with
-    # 4 partitions, AQE settings neutral). prar is already materialized,
-    # so sizing it is one cheap count; big markets keep the session
-    # default untouched — the million-entity path is unchanged.
-    sparks = prar.sparkSession
-    n_prar = prar.count()
-    prev_sp = sparks.conf.get("spark.sql.shuffle.partitions")
-    if n_prar < 50_000 * int(prev_sp):
-        sparks.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(int(prev_sp), n_prar // 50_000 + 4))),
-        )
 
     # The cumulative rejection set is IMPLICIT (round-13 optimization,
     # guide §2.4 "remove shuffles outright"): with batch rejection an
@@ -2534,7 +2521,11 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_blocks = loop_rounds((_GS_ROUNDS + inner - 1) // inner)
     converged = False
     prev_n = -1
-    try:
+    # Every per-round relation is bounded by |prar| (the truncated
+    # preference lists). Restoring the setting after the loop is safe:
+    # every loop-state relation is checkpoint-materialized inside the
+    # block, so the (lazy) final projection computes the same rows.
+    with loop_shuffle_partitions(prar.sparkSession, prar.count()):
         for _ in range(n_blocks):
             eng_n = eng
             for _ in range(inner):
@@ -2555,11 +2546,6 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
                 converged = True
                 break
             prev_n = n
-    finally:
-        # every loop-state relation is checkpoint-materialized inside the
-        # loop, so restoring the session default here cannot change what
-        # the (lazy) final projection computes
-        sparks.conf.set("spark.sql.shuffle.partitions", prev_sp)
     if not converged and not _scale.AUDIT_ITERATION_MODE:
         # The L+1 bound assumed each free proposer consumes a list entry
         # every round, which bumping violates (see docstring); fail LOUD

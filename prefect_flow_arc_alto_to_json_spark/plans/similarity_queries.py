@@ -2106,26 +2106,18 @@ def sim_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = e.select("vec_id", F.lit(0).cast("long").alias("cov"))
     picked: list = []
     out = None
-    from ..functions.scale import literal_df, loop_ckpt_lazy, loop_rounds
+    from ..functions.scale import (
+        literal_df,
+        loop_ckpt_lazy,
+        loop_rounds,
+        loop_shuffle_partitions,
+    )
 
-    # Size-adaptive loop parallelism (round-14; the dedup_components /
-    # q_stable_matching / bpe_train precedent): the dot KERNEL above is
-    # materialized at full parallelism, but each greedy round is a
-    # |pool|x|corpus|-row aggregate driven by a per-round collect — pure
-    # task scheduling at 32 shuffle partitions when the kernel is small.
-    # dp is just checkpointed, so sizing it is one cheap count; large
-    # kernels keep the session default. Restore is safe: every round's
-    # state executes inside the window via the collect (the final lazy
-    # cov stub is never consumed).
-    n_dp = dp.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    shrunk = n_dp < 50_000 * int(prev_sp)
-    if shrunk:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(int(prev_sp), n_dp // 50_000 + 4))),
-        )
-    try:
+    # Each greedy round is a |pool|x|corpus|-row aggregate over the dot
+    # kernel. Restoring the setting after the loop is safe: every round's
+    # state executes inside the block via its collect (the final lazy cov
+    # stub is never consumed).
+    with loop_shuffle_partitions(spark, dp.count()):
         for r in range(1, loop_rounds(5) + 1):
             pool_dp = dp
             if picked:
@@ -2173,9 +2165,6 @@ def sim_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("cov"),
                 )
             )
-    finally:
-        if shrunk:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return out
 
 

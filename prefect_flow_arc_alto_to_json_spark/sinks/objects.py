@@ -51,7 +51,6 @@ def write_json_objects(
     target: str,
     key_col: str = "s3_key",
     json_col: str = "json",
-    pretty: bool = True,
     client_factory=None,
 ) -> None:
     """Write each row's ``json_col`` as one object named ``key_col``.
@@ -78,7 +77,7 @@ def write_json_objects(
         def write_partition(rows: Iterator[Row]) -> None:
             client = factory()
             for row in rows:
-                body = _pretty_json(row[json_col]) if pretty else row[json_col]
+                body = _pretty_json(row[json_col])
                 key = f"{prefix.rstrip('/')}/{row[key_col]}" if prefix else row[key_col]
                 client.put_object(Bucket=bucket, Key=key, Body=body.encode("utf-8"))
 
@@ -87,7 +86,7 @@ def write_json_objects(
         def write_partition(rows: Iterator[Row]) -> None:
             os.makedirs(target, exist_ok=True)
             for row in rows:
-                body = _pretty_json(row[json_col]) if pretty else row[json_col]
+                body = _pretty_json(row[json_col])
                 # atomic-ish local put: temp + rename, idempotent by key
                 final = os.path.join(target, row[key_col])
                 tmp = f"{final}.tmp-{os.getpid()}"

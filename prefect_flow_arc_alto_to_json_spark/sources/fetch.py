@@ -43,13 +43,11 @@ import queue
 import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
-from concurrent.futures import TimeoutError as FutureTimeoutError
 from urllib.error import HTTPError
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 #: (url, timeout_s) -> (body, error) — injectable for tests.
 Fetcher = Callable[[str, float], tuple[str | None, str | None]]
@@ -201,153 +199,6 @@ def fetch_urls(
         finally:
             # never wait: a hung fetch thread must not block the stage.
             pool.shutdown(wait=False, cancel_futures=True)
-
-    return df.mapInPandas(fetch_batches, schema=out_schema)
-
-
-def fetch_urls_polite(
-    df: DataFrame,
-    url_col: str = "premis_stored_at",
-    body_col: str = "body",
-    error_col: str = "fetch_error",
-    per_host_interval_s: float = 1.0,
-    max_hosts_concurrency: int = 8,
-    timeout_s: float = 30.0,
-    n_host_buckets: int | None = None,
-    fetcher: Fetcher | None = None,
-    sleep_fn=None,
-    time_fn=None,
-) -> DataFrame:
-    """Per-host rate-limited (polite) fetch — what a 100 TB crawl needs
-    that :func:`fetch_urls` deliberately doesn't do: cap the request rate
-    PER ORIGIN HOST no matter how many tasks the cluster runs.
-
-    The enforcement device is CO-LOCATION: ``repartition(parse_url(url,
-    'HOST'))`` lands every URL of a host in exactly one partition, so one
-    worker owns that host's entire queue and a local timestamp is a
-    correct global rate limiter — no distributed coordination, no shared
-    state. Within a partition, hosts run concurrently (one pool slot per
-    host, requests within a host strictly sequential with
-    ``per_host_interval_s`` between request STARTS, carried ACROSS Arrow
-    batches). The trade is documented: a single huge host serializes into
-    one task — that is the politeness contract doing its job, not skew to
-    be fixed.
-
-    ``sleep_fn``/``time_fn`` inject a fake clock for tests (no wall-clock
-    sleeps in CI); ``fetcher`` injects the transport like fetch_urls.
-
-    The module's stall guarantee HOLDS here too: each host queue runs
-    under a hard deadline sized to its length (every request at full
-    ``timeout_s`` plus its pacing wait, plus one timeout of margin), and
-    rows a hung transport never reached resolve to error rows — the
-    stage completes no matter what one origin does.
-    """
-    import time as _time
-
-    in_cols = df.columns
-    buckets = (
-        n_host_buckets or df.sparkSession.sparkContext.defaultParallelism
-    )
-    # lower(...) so the co-location key matches the LOWERCASED pacing key
-    # (urlparse().hostname): case-variant URLs of one host must land in one
-    # partition or they would rate-limit independently.
-    df = df.repartition(buckets, F.expr(f"lower(parse_url({url_col}, 'HOST'))"))
-    out_schema = ", ".join(
-        f"`{c}` {df.schema[c].dataType.simpleString()}" for c in in_cols
-    )
-    out_schema = f"{out_schema}, {body_col} string, {error_col} string"
-    fetch = fetcher or _fetch_one
-    _sleep = sleep_fn or _time.sleep
-    _now = time_fn or _time.monotonic
-    fake_clock = sleep_fn is not None or time_fn is not None
-
-    def _host_of(url) -> str:
-        # urlparse().hostname (port/userinfo stripped, lowercased) — the
-        # SAME key semantics as the partitioner's parse_url(url, 'HOST'),
-        # so http://h/a and http://h:80/b can never land in one partition
-        # yet pace on separate keys
-        if url is None:
-            return ""
-        try:
-            from urllib.parse import urlparse
-
-            return urlparse(str(url)).hostname or ""
-        except Exception:  # noqa: BLE001
-            return ""
-
-    def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_start: dict[str, float] = {}  # host pacing state, cross-batch
-        hung_hosts: set[str] = set()  # hosts whose runner breached its deadline
-
-        def run_host(host: str, items: list, done: list) -> None:
-            # appends (idx, result) to `done` as it goes, so a deadline
-            # abandon keeps every row the host DID finish
-            for idx, u in items:
-                wait = last_start.get(host, float("-inf")) + per_host_interval_s - _now()
-                if wait > 0:
-                    _sleep(wait)
-                last_start[host] = _now()
-                done.append((idx, fetch(u, timeout_s)))
-
-        for pdf in it:
-            # fresh pool per batch: a hung runner from an earlier batch keeps
-            # its (detached) thread but never occupies a slot here, so healthy
-            # hosts in later batches are never starved by accumulated hangs.
-            pool = ThreadPoolExecutor(max_workers=max_hosts_concurrency)
-            try:
-                by_host: dict[str, list] = {}
-                for idx, u in enumerate(pdf[url_col]):
-                    by_host.setdefault(_host_of(u), []).append((idx, u))
-                results: list = [None] * len(pdf)
-                work: list = []  # (future, host, items, done)
-                for h, items in by_host.items():
-                    if h in hung_hosts:
-                        # a possibly-still-running runner owns this host's
-                        # pacing clock — submitting a second runner would race
-                        # it (politeness violation). Error these rows now.
-                        for idx, _u in items:
-                            results[idx] = (
-                                None,
-                                "FetchHostHung: an earlier batch's runner for "
-                                "this host breached its deadline and may still "
-                                "be running; skipping to preserve politeness",
-                            )
-                        continue
-                    done: list = []
-                    work.append((pool.submit(run_host, h, items, done), h, items, done))
-                for f, h, items, done in work:
-                    # hard deadline PER HOST QUEUE (fetch_urls' stall
-                    # contract): every request in THIS host's queue at full
-                    # timeout + its pacing wait, + one timeout of margin.
-                    # None under an injected fake clock, where wall time
-                    # is fiction and a hang is the test's own bug.
-                    deadline = (
-                        None
-                        if fake_clock
-                        else (timeout_s + per_host_interval_s) * len(items)
-                        + timeout_s
-                    )
-                    try:
-                        f.result(timeout=deadline)
-                    except FutureTimeoutError:
-                        hung_hosts.add(h)  # never submit this host again
-                        # keep partial `done`; unreached rows error below
-                    for idx, r in done:
-                        results[idx] = r
-                for i, r in enumerate(results):
-                    if r is None:
-                        results[i] = (
-                            None,
-                            "FetchDeadlineExceeded: host queue did not "
-                            "finish within its hard deadline",
-                        )
-                pdf = pdf.copy()
-                pdf[body_col] = [r[0] for r in results]
-                pdf[error_col] = [r[1] for r in results]
-                yield pdf
-            finally:
-                # never wait: a hung fetch thread must not block the stage.
-                pool.shutdown(wait=False, cancel_futures=True)
 
     return df.mapInPandas(fetch_batches, schema=out_schema)
 

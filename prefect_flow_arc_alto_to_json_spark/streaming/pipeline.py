@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
+from ..functions.scale import scoped_conf
+
 #: Schema the events file-stream reads with (ts as µs TIMESTAMP_NTZ — the
 #: testdata parquet stores naive µs timestamps, same as the batch loader
 #: sees; see sources/tables.py for the normalization contract).
@@ -199,13 +201,10 @@ def run_available_now(
     startup costs more than the handful of window rows it manages
     (stream_late_data_drop measured 7.8 -> 9.0 s under RocksDB).
     """
-    spark = stream_df.sparkSession
-    prev = spark.conf.get(_PROVIDER_KEY, None)
-    if state_provider == "rocksdb":
-        spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-    elif state_provider is not None:
+    if state_provider not in (None, "rocksdb"):
         raise ValueError(f"unknown state_provider: {state_provider}")
-    try:
+    provider = ROCKSDB_PROVIDER if state_provider == "rocksdb" else None
+    with scoped_conf(stream_df.sparkSession, _PROVIDER_KEY, provider):
         writer = (
             stream_df.writeStream.outputMode(output_mode)
             .option("checkpointLocation", checkpoint_dir)
@@ -218,15 +217,6 @@ def run_available_now(
         else:
             raise ValueError("provide foreach_batch or memory_table")
         query.awaitTermination()
-    finally:
-        if state_provider == "rocksdb":
-            # restore-or-UNSET: conf.get(key, None) is None for never-set
-            # keys, and restoring only non-None values would leak the
-            # override into later queries (the round-9 conf-leak gotcha)
-            if prev is None:
-                spark.conf.unset(_PROVIDER_KEY)
-            else:
-                spark.conf.set(_PROVIDER_KEY, prev)
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:

@@ -167,6 +167,60 @@ def test_unigram_viterbi_matches_bruteforce_optimum(spark):
         assert r["n_pieces"] == len(pieces)
 
 
+def test_unigram_viterbi_tie_break_on_equal_scores(spark):
+    """Tie-heavy corpus: words over disjoint characters, each seen once,
+    so every piece has count 1 and the same score, and every segmentation
+    with the fewest pieces ties on cost. The operator's struct-min over
+    (cost, j, ...) per DP level must then pick the segmentation that a
+    brute-force enumeration picks under the same order: least cost, then
+    the earliest start of the last piece (the longest final piece), then
+    the same rule applied to the prefix before it."""
+    import math
+
+    from prefect_flow_arc_alto_to_json_spark.operators.bpe import (
+        unigram_viterbi,
+    )
+
+    words = ["abcdefg", "hijklm", "nopqr", "stuvwxyz", "0123456", "789"]
+    docs = spark.createDataFrame([(" ".join(words),)], "text string")
+    rows = {r["word"]: r for r in unigram_viterbi(docs).collect()}
+
+    n_pieces = sum(
+        min(4, len(w) - j) for w in words for j in range(len(w))
+    )
+    score = round(-math.log(1 / n_pieces) * 1_000_000)  # every piece
+
+    def segmentations(w):
+        if not w:
+            yield []
+            return
+        for l in range(1, min(4, len(w)) + 1):
+            for rest in segmentations(w[l:]):
+                yield [w[:l], *rest]
+
+    def tie_key(pieces):
+        starts, pos = [], 0
+        for p in pieces:
+            starts.append(pos)
+            pos += len(p)
+        return (score * len(pieces), tuple(reversed(starts)))
+
+    assert set(rows) == set(words)
+    n_tied = 0
+    for w in words:
+        segs = list(segmentations(w))
+        best = min(segs, key=tie_key)
+        n_tied += sum(1 for p in segs if len(p) == len(best)) > 1
+        r = rows[w]
+        assert r["seg"] == "|".join(best), (w, r["seg"], best)
+        assert r["vit_cost_micro"] == score * len(best)
+        assert r["n_pieces"] == len(best)
+    # the corpus really is tie-heavy: most words have several optima
+    assert n_tied >= 4
+    assert rows["abcdefg"]["seg"] == "abc|defg"
+    assert rows["nopqr"]["seg"] == "n|opqr"
+
+
 def test_kneser_ney_normalizes_exactly(spark, sf_dir):
     """The KN distribution must sum to EXACTLY 1 over the full vocabulary
     for every left context, in exact Fraction arithmetic: observed pairs

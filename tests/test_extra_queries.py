@@ -26,33 +26,17 @@ def con(sf_dir):
     c.close()
 
 
-# Queries whose semantics are genuinely not SQL-expressible may register
-# without an oracle (the driver then records a weaker rows-only check) —
-# but ONLY by appearing here with a reason, so the exemption is visible
-# in review instead of rotting silently (round-9 VERDICT #7).
-NON_SQL_EXEMPT: dict[str, str] = {}
-
-
 def test_registry_oracle_coverage_is_total():
     """CI guard (round-9 VERDICT #7): every registered query — graded
     window AND extra tier — must carry a DuckDB oracle, so the
-    parametrized oracle tests below (and the driver's sweep) cover the
-    whole registry. A query may opt out only via NON_SQL_EXEMPT, which
-    makes the exemption explicit. Without this guard, an oracle-less
-    registration would silently degrade to the rows-only tier now that
-    the extra tier is ~6x the graded window."""
-    dangling_extra = set(EXTRA_QUERIES) - set(EXTRA_ORACLES) - set(NON_SQL_EXEMPT)
-    dangling_graded = set(QUERIES) - set(ORACLES) - set(NON_SQL_EXEMPT)
+    parametrized oracle tests below (and the driver's sweep) execute and
+    check the whole registry. There is no opt-out: an oracle-less
+    registration would degrade to the driver's rows-only tier and no
+    test here would execute it."""
+    dangling_extra = set(EXTRA_QUERIES) - set(EXTRA_ORACLES)
+    dangling_graded = set(QUERIES) - set(ORACLES)
     assert not dangling_extra, f"extra queries without oracle: {sorted(dangling_extra)}"
     assert not dangling_graded, f"graded queries without oracle: {sorted(dangling_graded)}"
-    # exemptions must reference live registry entries (no stale names)
-    stale = set(NON_SQL_EXEMPT) - set(QUERIES) - set(EXTRA_QUERIES)
-    assert not stale, f"NON_SQL_EXEMPT references unknown queries: {sorted(stale)}"
-    # and an exempt query must not ALSO have an oracle (contradictory)
-    contradictory = set(NON_SQL_EXEMPT) & (set(ORACLES) | set(EXTRA_ORACLES))
-    assert not contradictory, (
-        f"NON_SQL_EXEMPT entries that do have oracles: {sorted(contradictory)}"
-    )
 
 
 def test_graded_registry_fits_driver_window():
@@ -84,8 +68,12 @@ def test_readme_query_count_matches_registry():
 
 @pytest.mark.parametrize("name", sorted(EXTRA_ORACLES))
 def test_extra_query_matches_oracle(name, spark, sf_dir, con):
+    # a query must leave the session conf as it found it (no leak into
+    # the next query of the same session)
+    conf_before = spark.conf.getAll
     df = EXTRA_QUERIES[name](spark, sf_dir)
     compare(df, con, EXTRA_ORACLES[name], name)
+    assert spark.conf.getAll == conf_before
 
 
 # (round-14, suite-duration fix) test_every_extra_query_runs was removed:

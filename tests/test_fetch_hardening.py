@@ -270,285 +270,3 @@ def test_injected_fetcher_final_error_is_not_retried(spark):
         _urls_df(spark, 3), url_col="url", fetcher=fetcher, retries=2, backoff_s=0.01
     ).collect()
     assert sorted(r["fetch_error"] for r in out) == ["Gone: attempt 1"] * 3
-
-
-def test_polite_fetch_paces_within_host(spark):
-    """Per-host request starts must be >= per_host_interval_s apart, on a
-    fully deterministic injected clock (concurrency=1 so the fake clock
-    has a single writer)."""
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    urls = [f"http://host-a.example/{i}" for i in range(4)] + [
-        f"http://host-b.example/{i}" for i in range(4)
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    clock = {"t": 0.0}
-
-    def fake_sleep(s):
-        clock["t"] += s
-
-    def fake_now():
-        return clock["t"]
-
-    def fake_fetch(url, timeout):
-        return f"{clock['t']:.3f}", None
-
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=10.0,
-        max_hosts_concurrency=1,
-        n_host_buckets=1,
-        fetcher=fake_fetch,
-        sleep_fn=fake_sleep,
-        time_fn=fake_now,
-    ).collect()
-    assert all(r["fetch_error"] is None for r in out)
-    starts: dict[str, list[float]] = {}
-    for r in out:
-        host = r["premis_stored_at"].split("/")[2]
-        starts.setdefault(host, []).append(float(r["body"]))
-    assert set(starts) == {"host-a.example", "host-b.example"}
-    for host, ts in starts.items():
-        ts.sort()
-        gaps = [b - a for a, b in zip(ts, ts[1:])]
-        assert all(g >= 10.0 - 1e-9 for g in gaps), (host, ts)
-
-
-def test_polite_fetch_host_colocation(spark):
-    """The repartition key (parse_url HOST) must land every URL of a host
-    in exactly one partition — the property that makes a task-local
-    timestamp a correct global rate limiter."""
-    urls = [
-        f"http://h{i % 5}.example/p/{i}" for i in range(50)
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    placed = (
-        df.repartition(8, F.expr("parse_url(premis_stored_at, 'HOST')"))
-        .select(
-            F.expr("parse_url(premis_stored_at, 'HOST')").alias("host"),
-            F.spark_partition_id().alias("pid"),
-        )
-        .groupBy("host")
-        .agg(F.countDistinct("pid").alias("n_pids"))
-        .collect()
-    )
-    assert len(placed) == 5
-    assert all(r["n_pids"] == 1 for r in placed)
-
-
-def test_polite_fetch_hosts_run_concurrently(spark):
-    """With a host-pool > 1 the batch completes for every host even while
-    one host's queue is long — no global serialization on errors either."""
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    urls = [f"http://big.example/{i}" for i in range(20)] + [
-        "http://small.example/only"
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    clock = {"t": 0.0}
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=0.0,
-        max_hosts_concurrency=4,
-        n_host_buckets=1,
-        fetcher=lambda u, t: (u, None),
-        sleep_fn=lambda s: None,
-        time_fn=lambda: clock["t"],
-    ).collect()
-    assert len(out) == 21
-    assert all(r["body"] == r["premis_stored_at"] for r in out)
-
-
-def test_polite_fetch_hung_host_cannot_stall_the_stage(spark):
-    """fetch_urls' stall contract holds for the polite variant: a
-    transport that ignores timeout_s resolves to error rows via the
-    per-host-queue hard deadline; other hosts' rows still succeed."""
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    def hanging_fetch(url, timeout):
-        if "hang" in str(url):
-            import time
-
-            time.sleep(30)
-        return str(url), None
-
-    urls = [
-        "http://ok.example/1",
-        "http://hang.example/2",
-        "http://ok.example/3",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=0.0,
-        timeout_s=0.2,
-        max_hosts_concurrency=4,
-        n_host_buckets=1,
-        fetcher=hanging_fetch,
-    ).collect()
-    by = {r["premis_stored_at"]: r for r in out}
-    assert by["http://hang.example/2"]["fetch_error"].startswith(
-        "FetchDeadlineExceeded"
-    )
-    assert by["http://ok.example/1"]["body"] == "http://ok.example/1"
-    assert by["http://ok.example/3"]["fetch_error"] is None
-
-
-def test_polite_fetch_port_variants_pace_as_one_host(spark):
-    """Pacing keys on urlparse().hostname — the SAME semantics as the
-    partitioner's parse_url(HOST) — so http://h/a and http://h:8080/b
-    share one rate limit instead of racing on distinct netloc keys."""
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    urls = [
-        "http://h.example/a",
-        "http://h.example:8080/b",
-        "http://h.example/c",
-        "http://h.example:9090/d",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    clock = {"t": 0.0}
-
-    def fake_sleep(s):
-        clock["t"] += s
-
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=10.0,
-        max_hosts_concurrency=1,
-        n_host_buckets=1,
-        fetcher=lambda u, t: (f"{clock['t']:.3f}", None),
-        sleep_fn=fake_sleep,
-        time_fn=lambda: clock["t"],
-    ).collect()
-    starts = sorted(float(r["body"]) for r in out)
-    gaps = [b - a for a, b in zip(starts, starts[1:])]
-    assert all(g >= 10.0 - 1e-9 for g in gaps), starts
-
-
-def test_polite_fetch_deadline_sized_per_host_queue(spark):
-    """ADVICE r8 (medium): the hard deadline must be sized to the HOST's
-    own queue length, not the whole Arrow batch — a 1-URL hung host inside
-    a 30-row batch resolves in ~(timeout + interval) + timeout, not
-    ~len(batch) * timeout (hours at production defaults)."""
-    import time
-
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    def hanging_fetch(url, timeout):
-        if "hang" in str(url):
-            time.sleep(30)
-        return str(url), None
-
-    urls = ["http://hang.example/only"] + [
-        f"http://ok.example/{i}" for i in range(30)
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    t0 = time.monotonic()
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=0.05,
-        timeout_s=0.3,
-        max_hosts_concurrency=4,
-        n_host_buckets=1,
-        fetcher=hanging_fetch,
-    ).collect()
-    elapsed = time.monotonic() - t0
-    by = {r["premis_stored_at"]: r for r in out}
-    assert by["http://hang.example/only"]["fetch_error"].startswith(
-        "FetchDeadlineExceeded"
-    )
-    assert sum(1 for r in out if r["fetch_error"] is None) == 30
-    # batch-sized deadline would be (0.35 * 31 + 0.3) ≈ 11.2 s; the
-    # per-host-queue deadline is 0.65 s + ok-host pacing (~1.5 s)
-    assert elapsed < 8.0, elapsed
-
-
-def test_polite_fetch_hung_host_skipped_in_later_batches(spark):
-    """ADVICE r8 (low): a host whose runner breached its deadline may
-    still be running — later batches must NOT submit a second runner for
-    it (politeness race) nor let it eat a pool slot; its rows error
-    immediately with FetchHostHung."""
-    import time
-
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    def hanging_fetch(url, timeout):
-        if "hang" in str(url):
-            time.sleep(30)
-        return str(url), None
-
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        urls = ["http://hang.example/1", "http://hang.example/2"]
-        df = spark.createDataFrame(
-            [(u,) for u in urls], "premis_stored_at string"
-        )
-        out = fetch_urls_polite(
-            df,
-            per_host_interval_s=0.0,
-            timeout_s=0.2,
-            max_hosts_concurrency=2,
-            n_host_buckets=1,
-            fetcher=hanging_fetch,
-        ).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    errs = sorted(r["fetch_error"].split(":")[0] for r in out)
-    # one row hits the deadline live; the other (its own 1-row batch) is
-    # skipped because the host is known-hung
-    assert errs == ["FetchDeadlineExceeded", "FetchHostHung"], errs
-
-
-def test_polite_fetch_case_variant_hosts_colocate_and_pace_as_one(spark):
-    """ADVICE r8 (low): the partition key lowercases (lower(parse_url))
-    to match the lowercased pacing key — http://Host/a and http://host/b
-    must land in ONE partition and share ONE rate limit."""
-    from prefect_flow_arc_alto_to_json_spark.sources.fetch import (
-        fetch_urls_polite,
-    )
-
-    urls = [
-        "http://H.example/a",
-        "http://h.example/b",
-        "http://H.EXAMPLE/c",
-        "http://h.example/d",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "premis_stored_at string")
-    placed = (
-        df.repartition(8, F.expr("lower(parse_url(premis_stored_at, 'HOST'))"))
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .collect()
-    )
-    assert len(placed) == 1, "case variants must co-locate"
-    clock = {"t": 0.0}
-
-    def fake_sleep(s):
-        clock["t"] += s
-
-    out = fetch_urls_polite(
-        df,
-        per_host_interval_s=10.0,
-        max_hosts_concurrency=1,
-        n_host_buckets=1,
-        fetcher=lambda u, t: (f"{clock['t']:.3f}", None),
-        sleep_fn=fake_sleep,
-        time_fn=lambda: clock["t"],
-    ).collect()
-    starts = sorted(float(r["body"]) for r in out)
-    gaps = [b - a for a, b in zip(starts, starts[1:])]
-    assert all(g >= 10.0 - 1e-9 for g in gaps), starts

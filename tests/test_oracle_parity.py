@@ -21,8 +21,12 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
+    # a query must leave the session conf as it found it (no leak into
+    # the next query of the same session)
+    conf_before = spark.conf.getAll
     df = QUERIES[name](spark, sf_dir)
     compare(df, con, ORACLES[name], name)
+    assert spark.conf.getAll == conf_before
 
 
 # (round-14, suite-duration fix) test_every_query_runs was removed: it

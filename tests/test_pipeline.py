@@ -222,8 +222,30 @@ def test_write_json_objects_s3_no_prefix(spark, tmp_path):
         return types.SimpleNamespace(put_object=put_object)
 
     df = spark.createDataFrame([("k.json", '{"x":1}')], "s3_key string, json string")
-    write_json_objects(df, "s3://bkt", client_factory=factory, pretty=False)
-    assert open(os.path.join(root, "bkt", "k.json")).read() == '{"x":1}'
+    write_json_objects(df, "s3://bkt", client_factory=factory)
+    assert open(os.path.join(root, "bkt", "k.json")).read() == '{\n  "x": 1\n}'
+
+
+def test_boto3_missing_guard_message(monkeypatch):
+    """boto3 ships in the container, so the ImportError guard of the
+    default s3 client factory is otherwise dead code here — pin its
+    contract by simulating the import failing."""
+    import builtins
+
+    from prefect_flow_arc_alto_to_json_spark.sinks.objects import (
+        _default_s3_client_factory,
+    )
+
+    real_import = builtins.__import__
+
+    def no_boto3(name, *args, **kwargs):
+        if name == "boto3":
+            raise ImportError("No module named 'boto3'")
+        return real_import(name, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "__import__", no_boto3)
+    with pytest.raises(NotImplementedError, match="requires boto3"):
+        _default_s3_client_factory()
 
 
 def test_dsir_scores_rank_target_language_first(spark, sf_dir):
