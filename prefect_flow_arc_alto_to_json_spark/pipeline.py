@@ -1,6 +1,6 @@
 """End-to-end ALTO pipeline — the reference's ``main_flow``
-(flows/main_flow.py:111-157) as ONE lazy DataFrame plan plus three edge
-sinks.
+(flows/main_flow.py:111-157) as ONE lazy DataFrame plan run by ONE Spark
+action.
 
 Reference stages → engine stages:
 
@@ -12,9 +12,10 @@ Reference stages → engine stages:
    → fetch_urls (mapInPandas) + simplify_alto (from_xml + HOFs) — the
      subprocess boundary dissolves into the plan (SURVEY.md §2.10 U1).
 4. transcript agg (:65-70) → transcript() array_join (order-safe).
-5. sinks (:94-103,141-147) → write_json_objects (object-per-record),
-   write_keyed_updates (UPDATE), write_rows_dbapi (INSERT).
-6. watermark save on completion (:114) → WatermarkStore.save after sinks.
+5. sinks (:94-103,141-147) → write_json_objects, the one action: per
+   partition the objects, then the UPDATE, then the INSERT.
+6. watermark save on completion (:114) → counts and max(updated_at) from
+   the action's ``observe()``; WatermarkStore.save after it succeeds.
 
 The driver-side for-loop with ``.result()`` joins (the reference's
 per-file serialization, :136-153) disappears into partition parallelism.
@@ -25,7 +26,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.scalar import basename
@@ -95,67 +96,58 @@ def run_pipeline(
     transcript_url_conn_factory=None,
     objects_client_factory=None,
 ) -> dict[str, int]:
-    """Execute the full flow. Returns row counts per outcome
-    (``processed``, ``failed``).
+    """Execute the full flow as ONE Spark action. Returns row counts per
+    outcome (``processed``, ``failed``).
 
-    Sink order mirrors the reference (S3 object, then UPDATE, then INSERT);
-    failed fetches/parses are quarantined, not fatal (unlike the
-    reference, where one bad file fails its whole task chain :59-63 — at
-    100 TB that policy would be unusable). The first sink runs the fused
-    scan → fetch → parse job and fills the cache; after the sinks, ONE
-    aggregate over the cached result yields both outcome counts and
-    max(updated_at), which is saved as the watermark.
+    The action is ``write_json_objects`` over the ok rows: per partition,
+    the S3 objects, then the UPDATE, then the INSERT (the reference's
+    order), so a document's DB rows commit only after its object exists.
+    A failed partition does not undo other partitions' commits; a rerun
+    repairs it, as every write is idempotent. Failed fetches/parses are
+    quarantined, not fatal (unlike the reference, where one bad file fails
+    its whole task chain :59-63 — at 100 TB that policy would be
+    unusable). An ``observe()`` on the same action yields both outcome
+    counts and max(updated_at) over every selected row, saved as the
+    watermark once the action has succeeded.
     """
     store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
     since = store.load() if store else None
 
     work = catalog_scan(spark, cfg.catalog_dir, since, cfg.full_sync)
-    result = transform(work, cfg).cache()
-    try:
-        is_ok = F.col("fetch_error").isNull() & F.col("alto_error").isNull()
-        ok = result.where(is_ok)
-
-        write_json_objects(
-            ok,
-            cfg.objects_target,
-            key_col="s3_key",
-            json_col="json",
-            # None -> the default boto3 client; tests inject a moto-endpoint
-            # factory (the reference's endpoint override, main_flow.py:126)
-            client_factory=objects_client_factory,
-        )
-
-        if representation_conn_factory is not None:
-            from .sinks import write_keyed_updates
-
-            write_keyed_updates(
-                ok.select(
-                    F.col("schema_transcript"),
-                    F.col("representation_id").alias("id"),
-                ),
-                representation_conn_factory,
-                table="representation",
-                set_col="schema_transcript",
-                key_col="id",
-            )
-        if transcript_url_conn_factory is not None:
-            from .sinks import write_rows_dbapi
-
-            write_rows_dbapi(
-                ok.select("representation_id", "schema_transcript_url"),
-                transcript_url_conn_factory,
-                sql=(
-                    "INSERT INTO schema_transcript_url "
-                    "(representation_id, schema_transcript_url) VALUES (?, ?)"
-                ),
-                param_cols=["representation_id", "schema_transcript_url"],
-            )
-
-        processed, failed, max_updated = result.agg(
-            F.count_if(is_ok), F.count_if(~is_ok), F.max("updated_at")
-        ).first()
-        if store is not None and max_updated is not None:
-            store.save(max_updated)
-        return {"processed": processed, "failed": failed}
-    finally:
-        result.unpersist()
+    is_ok = F.col("fetch_error").isNull() & F.col("alto_error").isNull()
+    outcome = Observation()
+    result = transform(work, cfg).observe(
+        outcome,
+        F.count_if(is_ok).alias("processed"),
+        F.count_if(~is_ok).alias("failed"),
+        F.max("updated_at").alias("watermark"),
+    )
+    statements = []
+    if representation_conn_factory is not None:
+        statements.append((
+            representation_conn_factory,
+            "UPDATE representation SET schema_transcript = ? WHERE id = ?",
+            ["schema_transcript", "representation_id"],
+        ))
+    if transcript_url_conn_factory is not None:
+        statements.append((
+            transcript_url_conn_factory,
+            "INSERT INTO schema_transcript_url (representation_id, schema_transcript_url) "
+            "SELECT ?, ? WHERE NOT EXISTS (SELECT 1 FROM schema_transcript_url "
+            "WHERE representation_id = ? AND schema_transcript_url = ?)",
+            ["representation_id", "schema_transcript_url"] * 2,
+        ))
+    write_json_objects(
+        result.where(is_ok),
+        cfg.objects_target,
+        key_col="s3_key",
+        json_col="json",
+        # None -> the default boto3 client; tests inject a moto-endpoint
+        # factory (the reference's endpoint override, main_flow.py:126)
+        client_factory=objects_client_factory,
+        statements=statements,
+    )
+    counts = outcome.get
+    if store is not None and counts["watermark"] is not None:
+        store.save(counts["watermark"])
+    return {"processed": counts["processed"], "failed": counts["failed"]}

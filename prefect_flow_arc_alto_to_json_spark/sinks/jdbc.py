@@ -3,27 +3,60 @@
 The reference updates ``graph.representation.schema_transcript`` and inserts
 into ``graph.schema_transcript_url`` one row at a time over per-row Postgres
 connections (flows/main_flow.py:94-103). Spark's JDBC writer has no UPDATE
-mode (SURVEY.md §4.3.2), so this is a ``foreachPartition`` writer over any
-DB-API connection factory: one connection + batched ``executemany`` +
-single commit per partition.
+mode (SURVEY.md §4.3.2), so :func:`run_statement` runs a statement over any
+DB-API connection factory: one connection, batched ``executemany``, one
+commit, closed before the caller's next statement opens (two factories may
+point at one single-writer sqlite file). The ``foreachPartition`` sinks
+below call it per partition; the object writer (sinks/objects.py) calls it
+inside its own Dataset action, after a partition's objects exist.
 
 Tests exercise it with sqlite3; production would pass a psycopg2/pg8000
 factory — the writer is driver-agnostic (paramstyle comes from the caller's
 SQL template).
 
 Idempotence (SURVEY.md §7.4.4): UPDATE-by-key is naturally idempotent under
-task retry; for INSERT use an upsert/ignore SQL template (e.g. Postgres
-``ON CONFLICT DO NOTHING``).
+task retry and rerun. An INSERT must skip rows already present:
+``run_pipeline``'s URL insert is ``INSERT ... SELECT ?, ? WHERE NOT EXISTS
+(...)`` (sqlite and Postgres, no unique constraint needed), so a retried
+partition or a document replayed by the ``>=`` watermark adds no row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, Row
 
 ConnectionFactory = Callable[[], Any]
+
+
+def run_statement(
+    connection_factory: ConnectionFactory,
+    sql: str,
+    params: Iterable[tuple],
+    batch_size: int = 1000,
+) -> None:
+    """Run ``sql`` once per parameter tuple on one fresh connection:
+    ``executemany`` per ``batch_size`` tuples, one commit at the end,
+    rollback on error, and the connection always closed."""
+    conn = connection_factory()
+    try:
+        cur = conn.cursor()
+        batch: list[tuple] = []
+        for p in params:
+            batch.append(p)
+            if len(batch) >= batch_size:
+                cur.executemany(sql, batch)
+                batch.clear()
+        if batch:
+            cur.executemany(sql, batch)
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
+    finally:
+        conn.close()
 
 
 def write_rows_dbapi(
@@ -33,32 +66,13 @@ def write_rows_dbapi(
     param_cols: list[str],
     batch_size: int = 1000,
 ) -> None:
-    """Run ``sql`` for every row with parameters taken from ``param_cols``.
-
-    One connection per partition, ``executemany`` per ``batch_size`` rows,
-    one transaction per partition (commit at the end, rollback on error) —
-    the batched, connection-pooled answer to the reference's
-    connection-per-row loop.
-    """
+    """Run ``sql`` for every row with parameters taken from ``param_cols``,
+    one :func:`run_statement` (one connection, one transaction) per
+    partition — the batched answer to the reference's connection-per-row
+    loop."""
 
     def write_partition(rows: Iterator[Row]) -> None:
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            batch: list[tuple] = []
-            for row in rows:
-                batch.append(tuple(row[c] for c in param_cols))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    batch.clear()
-            if batch:
-                cur.executemany(sql, batch)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
+        run_statement(connection_factory, sql, (tuple(r) for r in rows), batch_size)
 
     df.select(*param_cols).foreachPartition(write_partition)
 

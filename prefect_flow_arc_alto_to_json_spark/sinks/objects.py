@@ -3,15 +3,22 @@ document, key = ``basename(url) + ".json"``, body pretty-printed with
 2-space indent — flows/main_flow.py:141-147, js:24070-24072).
 
 Spark's ``df.write.json`` writes one file per *partition*; the reference's
-contract is one object per *record*, so this is a ``foreachPartition``
-writer (SURVEY.md §4.3.3). The destination is pluggable:
+contract is one object per *record*. So this writer is a Dataset action:
+a ``mapInArrow`` function driven by ``write.format("noop")``. It takes
+Arrow batches (no pickled ``Row``s), and any ``observe()`` upstream fires
+on it. The destination is pluggable:
 
 - ``file`` scheme (default): local/NFS directory — used by tests.
 - ``s3`` scheme: boto3 ``put_object`` behind an import-try. Exercised
   END-TO-END against a live moto S3 endpoint from executor workers in
-  tests/test_object_sink_s3_live.py (round 8 — the container now ships
-  boto3+moto); fake-client tests keep covering key/byte semantics
-  dependency-free.
+  tests/test_object_sink_s3_live.py; fake-client tests keep covering
+  key/byte semantics dependency-free.
+
+``statements`` chain the reference's DB writes (flows/main_flow.py:94-103)
+onto the same pass: after a partition's last object, each statement runs
+in order over the partition's rows through ``sinks/jdbc.py:run_statement``,
+one connection open at a time, so a row's DB writes commit only after its
+object exists.
 
 Idempotence: PUT-by-key overwrites, so task retries are safe (same key →
 same bytes), satisfying exactly-once-ish semantics under Spark's task
@@ -22,9 +29,11 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
+
+from .jdbc import run_statement
 
 
 def _pretty_json(json_str: str) -> str:
@@ -52,8 +61,10 @@ def write_json_objects(
     key_col: str = "s3_key",
     json_col: str = "json",
     client_factory=None,
+    statements: Sequence[tuple] = (),
 ) -> None:
-    """Write each row's ``json_col`` as one object named ``key_col``.
+    """Write each row's ``json_col`` as one object named ``key_col``, then
+    run ``statements`` for the partition's rows.
 
     ``target``: ``/local/dir`` or ``s3://bucket/prefix``.
 
@@ -64,37 +75,54 @@ def write_json_objects(
     the dependency. The factory is invoked ONCE PER PARTITION on the
     executor (clients aren't picklable; factories are).
 
+    ``statements``: ``(connection_factory, sql, param_cols)`` triples; the
+    parameters are each row's ``param_cols`` values as Python objects.
+
     Scale: purely partition-parallel, no shuffle, no driver involvement;
     object-store throughput is the only limit (tune with ``repartition``
-    upstream to control concurrent PUTs).
+    upstream to control concurrent PUTs). Objects are written per Arrow
+    batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, or the
+    partition's end).
     """
-    is_s3 = target.startswith("s3://")
-    if is_s3:
-        bucket_and_prefix = target[len("s3://") :]
-        bucket, _, prefix = bucket_and_prefix.partition("/")
-        factory = client_factory or _default_s3_client_factory
+    if target.startswith("s3://"):
+        bucket, _, prefix = target[len("s3://") :].partition("/")
+        open_client = client_factory or _default_s3_client_factory
 
-        def write_partition(rows: Iterator[Row]) -> None:
-            client = factory()
-            for row in rows:
-                body = _pretty_json(row[json_col])
-                key = f"{prefix.rstrip('/')}/{row[key_col]}" if prefix else row[key_col]
-                client.put_object(Bucket=bucket, Key=key, Body=body.encode("utf-8"))
+        def put(client, key: str, body: str) -> None:
+            key = f"{prefix.rstrip('/')}/{key}" if prefix else key
+            client.put_object(Bucket=bucket, Key=key, Body=body.encode("utf-8"))
 
     else:
 
-        def write_partition(rows: Iterator[Row]) -> None:
+        def open_client() -> None:
             os.makedirs(target, exist_ok=True)
-            for row in rows:
-                body = _pretty_json(row[json_col])
-                # atomic-ish local put: temp + rename, idempotent by key
-                final = os.path.join(target, row[key_col])
-                tmp = f"{final}.tmp-{os.getpid()}"
-                with open(tmp, "w", encoding="utf-8") as f:
-                    f.write(body)
-                os.replace(tmp, final)
 
-    df.select(key_col, json_col).foreachPartition(write_partition)
+        def put(_, key: str, body: str) -> None:
+            # atomic-ish local put: temp + rename, idempotent by key
+            final = os.path.join(target, key)
+            tmp = f"{final}.tmp-{os.getpid()}"
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(body)
+            os.replace(tmp, final)
+
+    param_cols = list(dict.fromkeys(c for _, _, cols in statements for c in cols))
+
+    def write_partition(batches: Iterator) -> Iterator:
+        client, written = open_client(), []
+        for batch in batches:
+            keys, docs = batch.column(key_col).to_pylist(), batch.column(json_col).to_pylist()
+            for key, doc in zip(keys, docs):
+                put(client, key, _pretty_json(doc))
+            if statements:
+                written.append(batch.select(param_cols))
+        for connection_factory, sql, cols in statements:
+            params = (p for b in written for p in zip(*(b.column(c).to_pylist() for c in cols)))
+            run_statement(connection_factory, sql, params)
+        return iter(())
+
+    out = df.select(*dict.fromkeys([key_col, json_col, *param_cols]))
+    writer = out.mapInArrow(write_partition, out.select(key_col).schema)
+    writer.write.format("noop").mode("overwrite").save()
 
 
 from ..functions.selfship import self_ship  # noqa: E402

@@ -97,24 +97,23 @@ def fetch_urls(
     error_col: str = "fetch_error",
     max_concurrency: int = 8,
     timeout_s: float = 30.0,
-    partitions: int | None = None,
     retries: int = 2,
     backoff_s: float = 0.5,
     fetcher: Fetcher | None = None,
 ) -> DataFrame:
     """Fetch every row's URL, appending ``body_col`` / ``error_col``.
 
-    Scale: ``repartition(partitions)`` controls total fan-out (e.g. 1000
-    executors x 8 concurrent GETs); within a partition a thread pool of
-    ``max_concurrency`` hides latency while Arrow batches keep
-    serialization cheap.
+    Scale: fan-out follows the input's partitions (e.g. 1000 partitions
+    x 8 concurrent GETs); callers who need more spread repartition
+    upstream. Within a partition a thread pool of ``max_concurrency``
+    hides latency while Arrow batches keep serialization cheap.
 
     Output order: within each input Arrow batch, rows are emitted as their
-    fetches complete, so the plan downstream (parse, JSON, sinks) works on
-    early rows while slow ones are still in flight; the next input batch
-    is submitted once every row of the current one has resolved. Row
-    order is NOT part of the contract; each row keeps its own input
-    columns.
+    fetches complete, so the JVM parse downstream works on early rows
+    while slow ones are still in flight (a Python writer downstream sees
+    whole Arrow batches); the next input batch is submitted once every
+    row of the current one has resolved. Row order is NOT part of the
+    contract; each row keeps its own input columns.
 
     Failures: a transient error (connection or timeout, HTTP 5xx, HTTP
     408/425/429, any plain-``str`` error of an injected fetcher) is
@@ -134,11 +133,7 @@ def fetch_urls(
     ``fetcher`` swaps the transport for tests (fault injection); production
     callers leave the stdlib default.
     """
-    in_cols = df.columns
-    if partitions:
-        df = df.repartition(partitions)
-
-    out_schema = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in in_cols)
+    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
     out_schema = f"{out_schema}, {body_col} string, {error_col} string"
 
     fetch = fetcher or _fetch_one
