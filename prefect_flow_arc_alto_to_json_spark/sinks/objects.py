@@ -118,7 +118,7 @@ def write_json_objects(
         for connection_factory, sql, cols in statements:
             params = (p for b in written for p in zip(*(b.column(c).to_pylist() for c in cols)))
             run_statement(connection_factory, sql, params)
-        return iter(())
+        return iter(())  # no rows out: the noop write only drives the partitions
 
     out = df.select(*dict.fromkeys([key_col, json_col, *param_cols]))
     writer = out.mapInArrow(write_partition, out.select(key_col).schema)
