@@ -1,21 +1,25 @@
 """ALTO XML → simplified JSON document engine (reference parity core).
 
 Re-expresses ``script/extract-text-lines-from-alto.js:23956-24059`` as pure
-DataFrame column expressions: one ``from_xml`` parse, a per-row ``when``
-dispatch on the root namespace, and higher-order array functions
-(transform/filter/flatten) for the six-level flatMap — all inside Catalyst
-codegen, no per-document process (the reference forks a Node subprocess per
-file, flows/main_flow.py:54-58).
+DataFrame column expressions: one ``from_xml`` parse and higher-order array
+functions (transform/filter/flatten) for the six-level flatMap — all inside
+Catalyst codegen, no per-document process (the reference forks a Node
+subprocess per file, flows/main_flow.py:54-58).
 
-Version semantics preserved (SURVEY.md §7.4.1):
+The reference's v2 and v3 extractors (js:23956-24041) are near-copies, so
+there is ONE description and ONE text array; the root namespace chooses
+inside them (SURVEY.md §7.4.1):
 - v2 drops strings whose CONTENT is missing OR empty (js:23962,23968-23970);
   v3 keeps them (js:24012-24018).
 - v3 ``fileName`` is always null (js:24027).
 - page WIDTH/HEIGHT stay strings (js:23997-23998).
 - coordinates use JS ``parseInt`` prefix semantics (js:23973-23976):
   "12px"→12, "abc"→null.
-- unsupported namespace → all-null description, null text, error message
-  recorded (js:24044-24058).
+- an unsupported namespace reads as a null document: all-null description,
+  null text, error message recorded (js:24044-24058).
+- attribute and text values keep their surrounding whitespace, as xml2js
+  keeps it (``trim: false``, SURVEY.md S3): ``CONTENT=" "`` is truthy and
+  survives the v2 filter.
 
 Scale: every document is one row; the whole transform is narrow (no
 shuffle). 100 TB of scans parallelize by input split; a skewed giant
@@ -34,19 +38,6 @@ from ..schemas import ALTO_NS_V2, ALTO_NS_V3, ALTO_SCHEMA
 #: "Unsupported Alto format"), surfaced as a column instead of a log line so
 #: a 100 TB job can route bad documents to a quarantine sink.
 UNSUPPORTED_FORMAT_ERROR = "Unsupported Alto format"
-
-
-def parse_alto(df: DataFrame, xml_col: str = "xml", parsed_col: str = "alto") -> DataFrame:
-    """Parse raw ALTO XML text into the explicit nested schema.
-
-    ``from_xml`` is Spark-native (JVM, no Python boundary); mirrors the
-    reference's xml2js call (js:24064) with arrays at every level
-    (``explicitArray: true`` shape, js:19016).
-    """
-    return df.withColumn(
-        parsed_col,
-        F.from_xml(F.col(xml_col), ALTO_SCHEMA, {"attributePrefix": "_"}),
-    )
 
 
 def _cat(arr: Column, field: str) -> Column:
@@ -90,20 +81,19 @@ def _first(arr: Column) -> Column:
     return F.get(arr, 0)
 
 
-def _description(parsed: Column, is_v3: Column) -> Column:
-    """The 8-field description struct (js:23985-23999 v2, :24025-24041 v3)."""
-    desc = _first(parsed.getField("Description"))
+def _description(doc: Column, is_v2: Column) -> Column:
+    """The 8-field description struct (js:23985-23999 v2, :24025-24041 v3);
+    every field is null when ``doc`` is."""
+    desc = _first(doc.getField("Description"))
     source_image = _first(desc.getField("sourceImageInformation"))
     step = _first(
         _first(desc.getField("OCRProcessing")).getField("ocrProcessingStep")
     )
     software = _first(step.getField("processingSoftware"))
-    page = _first(_first(parsed.getField("Layout")).getField("Page"))
+    page = _first(_first(doc.getField("Layout")).getField("Page"))
     return F.struct(
         # v3 never emits a fileName (hardcoded undefined, js:24027)
-        F.when(is_v3, F.lit(None).cast("string"))
-        .otherwise(_first(source_image.getField("fileName")))
-        .alias("fileName"),
+        F.when(is_v2, _first(source_image.getField("fileName"))).alias("fileName"),
         _first(step.getField("processingDateTime")).alias("processingDateTime"),
         _first(step.getField("processingStepSettings")).alias(
             "processingStepSettings"
@@ -117,67 +107,46 @@ def _description(parsed: Column, is_v3: Column) -> Column:
     )
 
 
-def _null_description() -> Column:
-    """All-null description for the unsupported-namespace branch
-    (js:24045-24058 returns every field undefined)."""
-    n = F.lit(None).cast("string")
-    return F.struct(
-        n.alias("fileName"),
-        n.alias("processingDateTime"),
-        n.alias("processingStepSettings"),
-        n.alias("softwareCreator"),
-        n.alias("softwareName"),
-        n.alias("softwareVersion"),
-        n.alias("width"),
-        n.alias("height"),
-    )
+def simplify_alto(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    """Full per-document transform: parse → extract.
 
-
-def simplify_alto(
-    df: DataFrame,
-    xml_col: str = "xml",
-    out_col: str = "simplified",
-    error_col: str = "alto_error",
-) -> DataFrame:
-    """Full per-document transform: parse → dispatch → extract.
-
-    Adds ``out_col`` (struct<description, text> — SIMPLIFIED_DOC_SCHEMA
-    shape) and ``error_col`` (null | 'Unsupported Alto format', the default
+    Adds ``simplified`` (struct<description, text> — SIMPLIFIED_DOC_SCHEMA
+    shape) and ``alto_error`` (null | 'Unsupported Alto format', the default
     branch js:24044-24058).
+
+    ``from_xml`` is Spark-native (JVM, no Python boundary) and mirrors the
+    reference's xml2js call (js:24064): arrays at every level (the
+    ``explicitArray: true`` shape, js:19016) and values left untrimmed
+    (``trim: false``). It runs in its own projection, once per row.
+
+    One description and one text array serve both versions. The document
+    is null unless the namespace is v2 or v3, so an unsupported one reads
+    as an all-null description and a null text. One filter carries both
+    version rules: v2 drops missing and empty CONTENT, v3 keeps every
+    String. ``fileName`` is read for v2 only.
     """
-    parsed_df = parse_alto(df, xml_col=xml_col, parsed_col="__alto_parsed")
     parsed = F.col("__alto_parsed")
     ns = parsed.getField("_xmlns")
     is_v2, is_v3 = ns == ALTO_NS_V2, ns == ALTO_NS_V3
-
-    strings = _strings(parsed)
-    # v2 falsy filter: missing AND empty CONTENT dropped (js:23962,23968-23970)
-    v2_strings = F.filter(
-        strings,
-        lambda s: s.getField("_CONTENT").isNotNull()
-        & (s.getField("_CONTENT") != ""),
+    supported = is_v2 | is_v3
+    doc = F.when(supported, parsed)
+    # v2 falsy filter (js:23962,23968-23970): a null CONTENT makes the
+    # predicate null, which drops the String too; v3 keeps all (js:24012-24018)
+    kept = F.filter(
+        _strings(parsed), lambda s: is_v3 | (s.getField("_CONTENT") != "")
     )
-    v2_text = F.transform(v2_strings, _line_struct)
-    v3_text = F.transform(strings, _line_struct)  # no filter (js:24012-24018)
-
-    simplified = (
-        F.when(is_v2, F.struct(_description(parsed, F.lit(False)).alias("description"), v2_text.alias("text")))
-        .when(is_v3, F.struct(_description(parsed, F.lit(True)).alias("description"), v3_text.alias("text")))
-        .otherwise(
-            F.struct(
-                _null_description().alias("description"),
-                F.lit(None)
-                .cast("array<struct<text:string,x:int,y:int,width:int,height:int>>")
-                .alias("text"),
-            )
-        )
+    simplified = F.struct(
+        _description(doc, is_v2).alias("description"),
+        F.when(supported, F.transform(kept, _line_struct)).alias("text"),
     )
-    error = F.when(is_v2 | is_v3, F.lit(None).cast("string")).otherwise(
+    error = F.when(supported, F.lit(None).cast("string")).otherwise(
         F.lit(UNSUPPORTED_FORMAT_ERROR)
     )
+    options = {"attributePrefix": "_", "ignoreSurroundingSpaces": "false"}
     return (
-        parsed_df.withColumn(out_col, simplified)
-        .withColumn(error_col, error)
+        df.withColumn("__alto_parsed", F.from_xml(F.col(xml_col), ALTO_SCHEMA, options))
+        .withColumn("simplified", simplified)
+        .withColumn("alto_error", error)
         .drop("__alto_parsed")
     )
 

@@ -93,15 +93,13 @@ def _fetch_one(url: str, timeout: float) -> tuple[str | None, str | None]:
 def fetch_urls(
     df: DataFrame,
     url_col: str = "premis_stored_at",
-    body_col: str = "body",
-    error_col: str = "fetch_error",
     max_concurrency: int = 8,
     timeout_s: float = 30.0,
     retries: int = 2,
     backoff_s: float = 0.5,
     fetcher: Fetcher | None = None,
 ) -> DataFrame:
-    """Fetch every row's URL, appending ``body_col`` / ``error_col``.
+    """Fetch every row's URL, appending ``body`` / ``fetch_error``.
 
     Scale: fan-out follows the input's partitions (e.g. 1000 partitions
     x 8 concurrent GETs); callers who need more spread repartition
@@ -134,7 +132,7 @@ def fetch_urls(
     callers leave the stdlib default.
     """
     out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
-    out_schema = f"{out_schema}, {body_col} string, {error_col} string"
+    out_schema = f"{out_schema}, body string, fetch_error string"
 
     fetch = fetcher or _fetch_one
     total_backoff = sum(backoff_s * 2**a for a in range(retries))
@@ -186,10 +184,8 @@ def fetch_urls(
                     if results:
                         rows = [pending.pop(f) for f in results]
                         yield pdf.iloc[rows].assign(
-                            **{
-                                body_col: [r[0] for r in results.values()],
-                                error_col: [r[1] for r in results.values()],
-                            }
+                            body=[r[0] for r in results.values()],
+                            fetch_error=[r[1] for r in results.values()],
                         )
         finally:
             # never wait: a hung fetch thread must not block the stage.

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
 from ..functions.scale import scoped_conf
+from ..sources.tables import read_events_parquet
 
 #: Schema the events file-stream reads with (ts as µs TIMESTAMP_NTZ — the
 #: testdata parquet stores naive µs timestamps, same as the batch loader
@@ -68,26 +69,18 @@ def stream_events(
     probe then finds nothing to infer from and we fall back to the default
     µs-NTZ contract (EVENTS_STREAM_SCHEMA) instead of raising.
     ``spark.sql.legacy.parquet.nanosAsLong`` is only set when the probe
-    actually detects a legacy-nanos file — and in that branch it must stay
-    set for the stream's lifetime (the streaming scan re-reads footers per
-    microbatch), a deliberate session-wide side effect documented here."""
+    meets a legacy-nanos file (sources/tables.py:read_events_parquet
+    decides, for the batch loader too)."""
     from pyspark.sql.types import TimestampNTZType, TimestampType
     from pyspark.errors import AnalysisException
 
     try:
-        probed = spark.read.parquet(source_dir).schema["ts"].dataType
+        probed = read_events_parquet(spark, source_dir).schema["ts"].dataType
     except AnalysisException as exc:
         msg = str(exc)
-        if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer" in msg:
-            # no files yet — stream with the default µs-NTZ contract
-            probed = None
-        elif "NANOS" in msg or "Illegal Parquet type" in msg:
-            # legacy TIMESTAMP(NANOS) footers are unreadable without the
-            # legacy conf; enable it (stream-lifetime requirement) + reprobe
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            probed = spark.read.parquet(source_dir).schema["ts"].dataType
-        else:
+        if "UNABLE_TO_INFER_SCHEMA" not in msg and "Unable to infer" not in msg:
             raise
+        probed = None  # no files yet — stream with the default µs-NTZ contract
     if probed is None or isinstance(probed, TimestampNTZType):
         schema, rebuild = EVENTS_STREAM_SCHEMA, (
             "timestamp_micros(timestampdiff(MICROSECOND,"

@@ -19,15 +19,15 @@ import json
 import os
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WATERMARK_FORMAT = "%Y-%m-%d"  # the reference's format (flows/main_flow.py:130)
 
 
 class WatermarkStore:
-    def __init__(self, directory: str, name: str = "alto_pipeline") -> None:
-        self.path = os.path.join(directory, f"{name}.watermark.json")
+    def __init__(self, directory: str) -> None:
+        self.path = os.path.join(directory, "alto_pipeline.watermark.json")
 
     def load(self) -> str | None:
         """Last successful run's watermark value ('%Y-%m-%d' string), or
@@ -53,7 +53,6 @@ class WatermarkStore:
 def incremental_filter(
     df: DataFrame,
     since: str | None,
-    updated_col: str | Column = "updated_at",
     full_sync: bool = False,
 ) -> DataFrame:
     """``updated_at >= since`` predicate (flows/main_flow.py:29-30), skipped
@@ -65,5 +64,4 @@ def incremental_filter(
     """
     if full_sync or since is None:
         return df
-    c = F.col(updated_col) if isinstance(updated_col, str) else updated_col
-    return df.where(c >= F.lit(since).cast("timestamp"))
+    return df.where(F.col("updated_at") >= F.lit(since).cast("timestamp"))

@@ -22,8 +22,22 @@ from prefect_flow_arc_alto_to_json_spark.operators.alto import (
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
-def _load(spark, *names):
-    rows = []
+#: An unknown namespace over a document that has a Description and a page
+#: WIDTH: the reference returns every field undefined (js:24044-24058)
+UNSUPPORTED_WITH_DESCRIPTION = (
+    '<alto xmlns="http://www.loc.gov/standards/alto/ns-v4#"><Description>'
+    "<sourceImageInformation><fileName>p.tif</fileName></sourceImageInformation>"
+    "<OCRProcessing><ocrProcessingStep><processingSoftware>"
+    "<softwareName>FineReader</softwareName></processingSoftware>"
+    "</ocrProcessingStep></OCRProcessing></Description>"
+    '<Layout><Page WIDTH="2480"><PrintSpace><TextBlock><TextLine>'
+    '<String CONTENT="Hello"/></TextLine></TextBlock></PrintSpace></Page>'
+    "</Layout></alto>"
+)
+
+
+def _load(spark, *names, inline=()):
+    rows = list(inline)
     for n in names:
         with open(os.path.join(FIXTURES, f"{n}.xml")) as f:
             rows.append((n, f.read()))
@@ -39,6 +53,7 @@ def simplified(spark):
         "alto_unsupported_ns",
         "alto_v2_bad_coords",
         "alto_v2_no_description",
+        inline=[("unsupported_with_description", UNSUPPORTED_WITH_DESCRIPTION)],
     )
     out = simplify_alto(df).withColumn("transcript", transcript("simplified"))
     return {r["name"]: r for r in out.collect()}
@@ -92,12 +107,13 @@ def test_v3_empty_textblock_contributes_nothing(simplified):
 
 
 def test_unsupported_namespace(simplified):
-    row = simplified["alto_unsupported_ns"]
-    doc = row["simplified"]
-    assert row["alto_error"] == UNSUPPORTED_FORMAT_ERROR
-    assert doc["text"] is None
-    assert all(v is None for v in doc["description"].asDict().values())
-    assert row["transcript"] is None
+    for name in ("alto_unsupported_ns", "unsupported_with_description"):
+        row = simplified[name]
+        doc = row["simplified"]
+        assert row["alto_error"] == UNSUPPORTED_FORMAT_ERROR, name
+        assert doc["text"] is None, name
+        assert all(v is None for v in doc["description"].asDict().values()), name
+        assert row["transcript"] is None, name
 
 
 def test_js_parse_int_semantics(simplified):

@@ -3,8 +3,9 @@ invariants of the extraction, independent of any golden file.
 
 Invariants (reference script/extract-text-lines-from-alto.js):
 - transcript == space-join of kept CONTENTs in document order (:23962-24001)
-- v2 drops missing/empty CONTENT; v3 keeps empty strings (:23968-23970 vs
-  :24012-24018)
+- v2 drops missing/empty CONTENT; v3 keeps empty strings and, as a null
+  text, missing ones (:23968-23970 vs :24012-24018)
+- whitespace around CONTENT is kept (xml2js ``trim: false``)
 - line count == kept String count
 - coords parse via parseInt semantics (prefix parse, null on no digits)
 """
@@ -27,16 +28,20 @@ ALTO_NS = {
     "v3": "http://www.loc.gov/standards/alto/ns-v3#",
 }
 
-# words without XML-special or whitespace chars; empty string allowed to
-# exercise the v2 falsy filter
-_word = st.text(
-    alphabet=st.characters(
-        whitelist_categories=("Lu", "Ll", "Nd"), max_codepoint=0x7F
+# words without XML-special chars; the empty string exercises the v2 falsy
+# filter, whitespace-padded words that values keep their spaces (xml2js
+# never trims), and None a String without CONTENT
+_word = st.one_of(
+    st.text(
+        alphabet=st.characters(
+            whitelist_categories=("Lu", "Ll", "Nd"), max_codepoint=0x7F
+        ),
+        max_size=8,
     ),
-    max_size=8,
+    st.sampled_from([" ", " a "]),
 )
 _coord = st.one_of(st.integers(0, 9999).map(str), st.just(""), st.just("x12"))
-_string_el = st.tuples(_word, _coord, _coord)
+_string_el = st.tuples(st.one_of(_word, st.none()), _coord, _coord)
 _textline = st.lists(_string_el, max_size=4)
 _textblock = st.lists(_textline, max_size=3)
 _page = st.lists(_textblock, max_size=3)
@@ -53,8 +58,9 @@ def _build_xml(version: str, pages) -> str:
             for strings in lines:
                 out.append("<TextLine>")
                 for content, h, v in strings:
+                    attr = "" if content is None else f'CONTENT="{content}" '
                     out.append(
-                        f'<String CONTENT="{content}" HPOS="{h}" VPOS="{v}" '
+                        f'<String {attr}HPOS="{h}" VPOS="{v}" '
                         f'WIDTH="10" HEIGHT="10"/>'
                     )
                 out.append("</TextLine>")
@@ -70,8 +76,8 @@ def _expected_lines(version: str, pages):
         for lines in blocks:
             for strings in lines:
                 for content, _h, _v in strings:
-                    if version == "v2" and content == "":
-                        continue  # falsy filter, v2 only
+                    if version == "v2" and not content:
+                        continue  # falsy filter (missing or ""), v2 only
                     kept.append(content)
     return kept
 
@@ -95,7 +101,8 @@ def test_transcript_is_ordered_join_of_kept_contents(spark, version, pages):
     assert row["alto_error"] is None
     got_lines = [t["text"] for t in row["simplified"]["text"]]
     assert got_lines == expected
-    assert row["transcript"] == " ".join(expected)
+    # a v3 line without CONTENT has a null text, which the join skips
+    assert row["transcript"] == " ".join(t for t in expected if t is not None)
 
 
 @settings(

@@ -65,6 +65,18 @@ def test_transcript_plan_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
+def test_alto_parse_runs_once_per_row(spark):
+    """from_xml stays in its own projection: every field of the simplified
+    document reads the one parse instead of re-parsing the body."""
+    from prefect_flow_arc_alto_to_json_spark.operators.alto import simplify_alto
+
+    df = spark.createDataFrame(
+        [("a", "<alto><Layout/></alto>")], "name string, xml string"
+    )
+    plan = simplify_alto(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_xml(") == 1, plan
+
+
 def test_capped_posting_join_is_broadcast_anti(spark, sf_dir):
     """The posting-frequency cap must be a BROADCAST anti-join on the tiny
     overflow set — if it ever degrades to a shuffled join, the cap itself

@@ -398,44 +398,59 @@ def test_stream_events_empty_dir_starts(spark, tmp_path):
     assert out == []
 
 
-def test_nanos_probe_sets_conf_only_when_needed(spark, tmp_path):
-    """stream_events must not flip the session-global nanosAsLong conf
-    unless the probe actually meets a legacy-nanos file (round-5 ADVICE):
-    a µs-NTZ source leaves the conf untouched; a nanos source self-heals
-    by setting it and re-probing."""
+def _load_ids_and_epochs(spark, src, _ckpt):
+    from prefect_flow_arc_alto_to_json_spark.functions.scalar import epoch_us
+
+    ev = load_table(spark, str(src), "events").select("event_id", epoch_us("ts"))
+    return dict(tuple(r) for r in ev.collect())
+
+
+@pytest.mark.parametrize(
+    "read", [_load_ids_and_epochs, _drain_ids_and_epochs], ids=["batch", "stream"]
+)
+def test_nanos_probe_sets_conf_only_when_needed(spark, tmp_path, read):
+    """Neither the batch loader nor stream_events may flip the
+    session-global nanosAsLong conf unless the probe actually meets a
+    legacy-nanos file: a µs-NTZ source leaves the conf unset; a nanos
+    source self-heals by setting it and reading again."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(conf_key, None)
     spark.conf.unset(conf_key)
+    try:
+        # µs-NTZ source (store_schema=False keeps pure parquet logical types)
+        us_src = tmp_path / "us_src"
+        us_src.mkdir()
+        table_us = pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([1_700_000_000_000_000], pa.timestamp("us")),
+                "user_id": pa.array([1], pa.int64()),
+                "event_type": pa.array(["view"]),
+                "value": pa.array([1.0]),
+                "props": pa.array([None], pa.string()),
+            }
+        )
+        pq.write_table(table_us, str(us_src / "events.parquet"), store_schema=False)
+        assert read(spark, us_src, tmp_path / "us_ckpt") == {1: 1_700_000_000_000_000}
+        assert spark.conf.get(conf_key, None) is None
 
-    # µs-NTZ source (store_schema=False keeps pure parquet logical types)
-    us_src = tmp_path / "us_src"
-    us_src.mkdir()
-    table_us = pa.table(
-        {
-            "event_id": pa.array([1], pa.int64()),
-            "ts": pa.array([1_700_000_000_000_000], pa.timestamp("us")),
-            "user_id": pa.array([1], pa.int64()),
-            "event_type": pa.array(["view"]),
-            "value": pa.array([1.0]),
-            "props": pa.array([None], pa.string()),
-        }
-    )
-    pq.write_table(table_us, str(us_src / "events.parquet"), store_schema=False)
-    stream_events(spark, str(us_src))
-    assert spark.conf.get(conf_key, "false") == "false"
-
-    # legacy nanos source: probe fails once, conf is set, reprobe succeeds
-    ns_src = tmp_path / "ns_src"
-    ns_src.mkdir()
-    table_ns = table_us.set_column(
-        1, "ts", pa.array([1_700_000_000_000_000_000], pa.timestamp("ns"))
-    )
-    pq.write_table(table_ns, str(ns_src / "events.parquet"), store_schema=False)
-    got = _drain_ids_and_epochs(spark, ns_src, tmp_path / "ns_ckpt")
-    assert got == {1: 1_700_000_000_000_000}
-    assert spark.conf.get(conf_key, "false") == "true"
+        # legacy nanos source: the read fails once, conf is set, reread succeeds
+        ns_src = tmp_path / "ns_src"
+        ns_src.mkdir()
+        table_ns = table_us.set_column(
+            1, "ts", pa.array([1_700_000_000_000_000_000], pa.timestamp("ns"))
+        )
+        pq.write_table(table_ns, str(ns_src / "events.parquet"), store_schema=False)
+        assert read(spark, ns_src, tmp_path / "ns_ckpt") == {1: 1_700_000_000_000_000}
+        assert spark.conf.get(conf_key, None) == "true"
+    finally:
+        if saved is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, saved)
 
 
 def test_catalog_poll_reader_offsets_replay(tmp_path):
