@@ -14,8 +14,9 @@ Reference stages → engine stages:
 4. transcript agg (:65-70) → transcript() array_join (order-safe).
 5. sinks (:94-103,141-147) → write_json_objects, the one action: per
    partition the objects, then the UPDATE, then the INSERT.
-6. watermark save on completion (:114) → counts and max(updated_at) from
-   the action's ``observe()``; WatermarkStore.save after it succeeds.
+6. watermark save on completion (:114) → counts and the date of
+   max(updated_at) from the action's ``observe()``; WatermarkStore.save
+   after it succeeds.
 
 The driver-side for-loop with ``.result()`` joins (the reference's
 per-file serialization, :136-153) disappears into partition parallelism.
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import basename
 from .operators.alto import simplified_json, simplify_alto, transcript
+from .schemas import FILE_SCHEMA, INCLUDES_SCHEMA
 from .sinks import write_json_objects
 from .sources.fetch import fetch_urls
 from .streaming.watermark import WatermarkStore, incremental_filter
@@ -52,9 +54,17 @@ def catalog_scan(
     """The reference's catalog SQL (flows/main_flow.py:22-30) as a plan:
     projection + mime/schema predicates + includes-join + watermark range.
     Over JDBC the same plan pushes down to Postgres; here the catalog is a
-    parquet mirror (FIXTURES.md §2)."""
-    file_df = spark.read.parquet(os.path.join(catalog_dir, "file.parquet"))
-    includes = spark.read.parquet(os.path.join(catalog_dir, "includes.parquet"))
+    parquet mirror (FIXTURES.md §2).
+
+    Both tables are read with their known schemas, so building the plan
+    runs no schema-inference job. ``updated_at`` reads as ``timestamp``
+    whether the file stores it with a zone (Spark) or without one
+    (pyarrow's ``timestamp[us]``); the session time zone (UTC) keeps the
+    wall clock of the latter."""
+    file_df = spark.read.schema(FILE_SCHEMA).parquet(os.path.join(catalog_dir, "file.parquet"))
+    includes = spark.read.schema(INCLUDES_SCHEMA).parquet(
+        os.path.join(catalog_dir, "includes.parquet")
+    )
     scan = (
         file_df.where(
             (F.col("ebucore_has_mime_type") == "application/xml")
@@ -72,20 +82,21 @@ def transform(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """fetch → parse → simplify → transcript → keys/urls, still lazy."""
     fetched = fetch_urls(df, url_col="premis_stored_at")
     simplified = simplify_alto(fetched, xml_col="body")
+    s3_key = F.concat(basename("premis_stored_at"), F.lit(".json"))
     return simplified.select(
         "representation_id",
         "premis_stored_at",
         "updated_at",
         "fetch_error",
         "alto_error",
-        F.col("simplified").alias("simplified"),
+        "simplified",
         transcript("simplified").alias("schema_transcript"),
         simplified_json("simplified").alias("json"),
-        F.concat(basename("premis_stored_at"), F.lit(".json")).alias("s3_key"),
-    ).withColumn(
-        "schema_transcript_url",
+        s3_key.alias("s3_key"),
         # f"{endpoint}/{bucket}/{key}" (flows/main_flow.py:150)
-        F.concat_ws("/", F.lit(cfg.s3_endpoint), F.lit(cfg.s3_bucket), F.col("s3_key")),
+        F.concat_ws("/", F.lit(cfg.s3_endpoint), F.lit(cfg.s3_bucket), s3_key).alias(
+            "schema_transcript_url"
+        ),
     )
 
 
@@ -107,8 +118,11 @@ def run_pipeline(
     quarantined, not fatal (unlike the reference, where one bad file fails
     its whole task chain :59-63 — at 100 TB that policy would be
     unusable). An ``observe()`` on the same action yields both outcome
-    counts and max(updated_at) over every selected row, saved as the
-    watermark once the action has succeeded.
+    counts and the date of max(updated_at) over every selected row, saved
+    as the watermark once the action has succeeded. The date is formatted
+    inside Spark, in the session time zone the next night's
+    ``updated_at >= since`` filter reads it in; a timestamp collected to
+    Python would be converted in the driver process's local zone instead.
     """
     store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
     since = store.load() if store else None
@@ -120,7 +134,7 @@ def run_pipeline(
         outcome,
         F.count_if(is_ok).alias("processed"),
         F.count_if(~is_ok).alias("failed"),
-        F.max("updated_at").alias("watermark"),
+        F.date_format(F.max("updated_at"), "yyyy-MM-dd").alias("watermark"),
     )
     statements = []
     if representation_conn_factory is not None:

@@ -20,6 +20,11 @@ in order over the partition's rows through ``sinks/jdbc.py:run_statement``,
 one connection open at a time, so a row's DB writes commit only after its
 object exists.
 
+During its action the writer receives its input in Arrow batches of 32
+rows (``WRITER_BATCH_ROWS``), not the session's 10,000: a partition's PUTs
+start once its first 32 rows are parsed and overlap the fetches still in
+flight, instead of waiting for the partition's last row.
+
 Idempotence: PUT-by-key overwrites, so task retries are safe (same key →
 same bytes), satisfying exactly-once-ish semantics under Spark's task
 re-execution (SURVEY.md §7.4.4).
@@ -33,7 +38,15 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame
 
+from ..functions.scale import scoped_conf
 from .jdbc import run_statement
+
+#: Arrow batch size during the writer's action. The first PUT waits for a
+#: full batch, so a small one starts the PUTs a few fetches in; 32 rows of
+#: pretty-printing and PUTs still outweigh a batch's Arrow overhead. The
+#: action's fetch reads ahead across these small input batches
+#: (sources/fetch.py), so its pool does not idle at every batch tail.
+WRITER_BATCH_ROWS = "32"
 
 
 def _pretty_json(json_str: str) -> str:
@@ -81,8 +94,9 @@ def write_json_objects(
     Scale: purely partition-parallel, no shuffle, no driver involvement;
     object-store throughput is the only limit (tune with ``repartition``
     upstream to control concurrent PUTs). Objects are written per Arrow
-    batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, or the
-    partition's end).
+    batch of ``WRITER_BATCH_ROWS`` rows (or the partition's end), set for
+    this action only; the statements run after the partition's last
+    object.
     """
     if target.startswith("s3://"):
         bucket, _, prefix = target[len("s3://") :].partition("/")
@@ -122,7 +136,9 @@ def write_json_objects(
 
     out = df.select(*dict.fromkeys([key_col, json_col, *param_cols]))
     writer = out.mapInArrow(write_partition, out.select(key_col).schema)
-    writer.write.format("noop").mode("overwrite").save()
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    with scoped_conf(df.sparkSession, batch_key, WRITER_BATCH_ROWS):
+        writer.write.format("noop").mode("overwrite").save()
 
 
 from ..functions.selfship import self_ship  # noqa: E402

@@ -28,9 +28,11 @@ Two more layers keep a slow origin from stalling the stage:
   abandoned thread is left to the worker's lifecycle — the stage itself
   always completes.
 
-Rows leave ``fetch_urls`` in COMPLETION order within each input batch,
-not input order, so the parse downstream starts on the first documents
-while the slow ones (and their retries) are still in flight.
+Rows leave ``fetch_urls`` in COMPLETION order, not input order, across
+input batches: the next input batch is read ahead whenever fewer than
+``max_concurrency`` rows are in flight, so the pool stays busy at batch
+boundaries and the parse downstream starts on the first documents while
+the slow ones (and their retries) are still in flight.
 
 Supported schemes: ``http(s)://`` via urllib (stdlib — no extra deps) and
 ``file://`` / bare paths for local corpora and tests.
@@ -106,12 +108,14 @@ def fetch_urls(
     upstream. Within a partition a thread pool of ``max_concurrency``
     hides latency while Arrow batches keep serialization cheap.
 
-    Output order: within each input Arrow batch, rows are emitted as their
-    fetches complete, so the JVM parse downstream works on early rows
+    Output order: rows are emitted as their fetches complete, across
+    input Arrow batches, so the JVM parse downstream works on early rows
     while slow ones are still in flight (a Python writer downstream sees
-    whole Arrow batches); the next input batch is submitted once every
-    row of the current one has resolved. Row order is NOT part of the
-    contract; each row keeps its own input columns.
+    whole Arrow batches). Whenever fewer than ``max_concurrency`` rows are
+    in flight, the next input batch is read and submitted, so a slow row
+    or a retry backoff holds up neither its batch's tail nor the batches
+    after it. Row order is NOT part of the contract; each row keeps its
+    own input columns.
 
     Failures: a transient error (connection or timeout, HTTP 5xx, HTTP
     408/425/429, any plain-``str`` error of an injected fetcher) is
@@ -158,35 +162,48 @@ def fetch_urls(
 
     def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pool = ThreadPoolExecutor(max_workers=max_concurrency)
+        done: queue.SimpleQueue = queue.SimpleQueue()
+        pending: dict = {}  # future -> (input batch, row position), oldest first
+        head, head_since = None, 0.0
         try:
-            for pdf in it:
-                done: queue.SimpleQueue = queue.SimpleQueue()
-                pending: dict = {}  # future -> row position, oldest first
-                for i, u in enumerate(pdf[url_col]):
-                    fut = pool.submit(fetch_with_retry, u)
-                    pending[fut] = i
-                    fut.add_done_callback(done.put)
-                head, head_since = None, 0.0
-                while pending:
-                    oldest = next(iter(pending))
-                    if oldest is not head:
-                        head, head_since = oldest, time.monotonic()
-                    finished = []
-                    with contextlib.suppress(queue.Empty):
-                        wait_s = head_since + hard_deadline - time.monotonic()
-                        finished.append(done.get(timeout=max(wait_s, 0.0)))
-                        while True:
-                            finished.append(done.get_nowait())
-                    # an abandoned row's thread may still finish: its row is out
-                    results = {f: f.result() for f in finished if f in pending}
-                    if head not in results and time.monotonic() >= head_since + hard_deadline:
-                        results[head] = deadline_row
-                    if results:
-                        rows = [pending.pop(f) for f in results]
-                        yield pdf.iloc[rows].assign(
-                            body=[r[0] for r in results.values()],
-                            fetch_error=[r[1] for r in results.values()],
+            while True:
+                # read ahead: keep the pool fed across input batch boundaries
+                while len(pending) < max_concurrency:
+                    pdf = next(it, None)
+                    if pdf is None:
+                        break
+                    for i, u in enumerate(pdf[url_col]):
+                        fut = pool.submit(fetch_with_retry, u)
+                        pending[fut] = (pdf, i)
+                        fut.add_done_callback(done.put)
+                if not pending:
+                    return
+                oldest = next(iter(pending))
+                if oldest is not head:
+                    head, head_since = oldest, time.monotonic()
+                finished = []
+                with contextlib.suppress(queue.Empty):
+                    wait_s = head_since + hard_deadline - time.monotonic()
+                    finished.append(done.get(timeout=max(wait_s, 0.0)))
+                    while True:
+                        finished.append(done.get_nowait())
+                # an abandoned row's thread may still finish: its row is out
+                results = {f: f.result() for f in finished if f in pending}
+                if head not in results and time.monotonic() >= head_since + hard_deadline:
+                    results[head] = deadline_row
+                by_batch: dict = {}  # id(input batch) -> (batch, positions, results)
+                for f, r in results.items():
+                    pdf, i = pending.pop(f)
+                    _, rows, out = by_batch.setdefault(id(pdf), (pdf, [], []))
+                    rows.append(i)
+                    out.append(r)
+                if by_batch:
+                    yield pd.concat([
+                        pdf.iloc[rows].assign(
+                            body=[r[0] for r in out], fetch_error=[r[1] for r in out]
                         )
+                        for pdf, rows, out in by_batch.values()
+                    ])
         finally:
             # never wait: a hung fetch thread must not block the stage.
             pool.shutdown(wait=False, cancel_futures=True)

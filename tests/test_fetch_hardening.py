@@ -20,7 +20,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 from pyspark.sql import functions as F
 
+from prefect_flow_arc_alto_to_json_spark.functions.scale import scoped_conf
 from prefect_flow_arc_alto_to_json_spark.sources.fetch import fetch_urls
+
+_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _urls_df(spark, n: int):
@@ -158,10 +161,7 @@ def test_fetch_streams_rows_in_completion_order(spark):
     """Rows leave in completion order across several input Arrow batches,
     and every row keeps its own URL-body pairing: none lost, none
     duplicated."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "4")  # 12 rows arrive as 3 input batches
-    try:
+    with scoped_conf(spark, _BATCH_ROWS, "4"):  # 12 rows arrive as 3 input batches
         out = fetch_urls(
             _urls_df(spark, 12),
             url_col="url",
@@ -169,13 +169,39 @@ def test_fetch_streams_rows_in_completion_order(spark):
             retries=0,
             max_concurrency=12,
         ).collect()
-    finally:
-        spark.conf.set(key, prev)
     urls = [r["url"] for r in out]
     assert sorted(urls) == sorted(f"synthetic://doc/{i}" for i in range(12))
     assert all(r["fetch_error"] is None and r["body"] == f"body-of-{r['url']}" for r in out)
     # row 0 sleeps longest: a batch-ordered fetch would emit it first
     assert urls[0] != "synthetic://doc/0", urls
+
+
+def _slow_first_fetcher(url, timeout):
+    """Row 0 sleeps 0.6 s, every other row 0.05 s."""
+    import time as _time
+
+    _time.sleep(0.6 if url.endswith("/0") else 0.05)
+    return f"body-of-{url}", None
+
+
+def test_fetch_reads_ahead_across_input_batches(spark):
+    """While slow row 0 is in flight, the free pool slots take the rows of
+    the next input batches, so a row of the third batch leaves before row
+    0. A fetch that read the next batch only once every row of the current
+    one had resolved would emit row 0 before any row of batches 2 and 3."""
+    with scoped_conf(spark, _BATCH_ROWS, "4"):  # 12 rows arrive as 3 input batches
+        out = fetch_urls(
+            _urls_df(spark, 12),
+            url_col="url",
+            fetcher=_slow_first_fetcher,
+            retries=0,
+            max_concurrency=4,
+        ).collect()
+    urls = [r["url"] for r in out]
+    assert sorted(urls) == sorted(f"synthetic://doc/{i}" for i in range(12))
+    assert all(r["fetch_error"] is None and r["body"] == f"body-of-{r['url']}" for r in out)
+    third_batch = {f"synthetic://doc/{i}" for i in range(8, 12)}
+    assert third_batch & set(urls[: urls.index("synthetic://doc/0")]), urls
 
 
 class _FaultOrigin:

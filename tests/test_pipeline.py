@@ -10,6 +10,7 @@ import datetime
 import json
 import os
 import sqlite3
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,6 +69,63 @@ def test_catalog_scan_filters(spark, catalog):
     # incremental: stale f5 drops out
     df2 = catalog_scan(spark, catalog, since="2024-01-05", full_sync=False)
     assert "rep5" not in {r["representation_id"] for r in df2.collect()}
+
+
+def test_catalog_scan_reads_either_timestamp_kind_without_a_job(spark, tmp_path):
+    """The same catalog rows written by pyarrow (``updated_at`` as
+    ``timestamp[us]`` without a zone) and by Spark (with one): the known
+    schema reads both, selects the same rows with the same wall clock, and
+    building either scan submits no job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    noon = [datetime.datetime(2024, 1, d, 12) for d in (10, 12, 2, 13, 13)]
+    ids = ["f1", "f2", "f5", "f6", "f7"]
+    cols = {
+        "id": ids + ["f3", "f4"],
+        "representation_id": [f"rep{i[1]}" for i in ids] + ["rep3", "rep4"],
+        "premis_stored_at": [_url("alto_v2")] * 7,
+        "ebucore_has_mime_type": ["application/xml"] * 5 + ["image/tiff", "application/xml"],
+        "schema_name": ["alto"] * 6 + ["mets"],
+        "updated_at": noon + noon[:2],
+    }
+    arrow_dir = tmp_path / "arrow"
+    arrow_dir.mkdir()
+    pq.write_table(
+        pa.table({**cols, "updated_at": pa.array(cols["updated_at"], pa.timestamp("us"))}),
+        str(arrow_dir / "file.parquet"),
+    )
+    pq.write_table(pa.table({"file_id": cols["id"]}), str(arrow_dir / "includes.parquet"))
+    assert pq.read_schema(str(arrow_dir / "file.parquet")).field("updated_at").type.tz is None
+
+    spark_dir = str(tmp_path / "spark")
+    utc = [t.replace(tzinfo=datetime.timezone.utc) for t in cols["updated_at"]]
+    spark.createDataFrame(
+        list(zip(*[cols[c] for c in list(cols)[:-1]], utc)),
+        "id string, representation_id string, premis_stored_at string,"
+        "ebucore_has_mime_type string, schema_name string, updated_at timestamp",
+    ).write.parquet(os.path.join(spark_dir, "file.parquet"))
+    spark.createDataFrame([(i,) for i in cols["id"]], "file_id string").write.parquet(
+        os.path.join(spark_dir, "includes.parquet")
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-catalog-scan-plan", "catalog_scan plan build")
+    try:
+        scans = [
+            catalog_scan(spark, d, since="2024-01-12", full_sync=False)
+            for d in (str(arrow_dir), spark_dir)
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("test-catalog-scan-plan")) == []
+
+    selected = [
+        sorted((r["representation_id"], r["updated_at"]) for r in df.collect()) for df in scans
+    ]
+    assert selected[0] == selected[1]
+    assert [rep for rep, _ in selected[0]] == ["rep2", "rep6", "rep7"]
 
 
 def _sink_db(path) -> str:
@@ -179,14 +237,98 @@ def test_pipeline_is_one_action(spark, catalog, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("test-pipeline-one-action")
-    # two parquet schema inferences, the includes broadcast and the one
-    # action; a cached fused job followed by two DB sink jobs and a counts
-    # aggregate made the same run 9 jobs
-    assert len(jobs) == 4
+    # the includes broadcast and the one action: the catalog is read with
+    # its known schema, so no parquet schema inference runs, and the sinks
+    # and counts ride on the action instead of jobs of their own
+    assert len(jobs) == 2
     assert {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} <= cached_before
     assert counts == {"processed": 3, "failed": 2}
     # max(updated_at) over every selected row, the two failed ones included
     assert WatermarkStore(str(tmp_path / "wm")).load() == "2024-01-13"
+
+
+def test_watermark_is_the_session_zone_date(spark, tmp_path, monkeypatch):
+    """A row updated at 2024-01-13 20:00 UTC: the next night filters
+    ``updated_at >= since`` in the session zone (UTC), so the saved date
+    is 2024-01-13 even from a driver process whose local zone is already
+    on the 14th (Tokyo); saving 2024-01-14 would skip the rest of the UTC
+    day's updates."""
+    from prefect_flow_arc_alto_to_json_spark.streaming.watermark import WatermarkStore
+
+    cat_dir = str(tmp_path / "catalog")
+    late = datetime.datetime(2024, 1, 13, 20, tzinfo=datetime.timezone.utc)
+    spark.createDataFrame(
+        [("f1", "rep1", _url("alto_v2"), "application/xml", "alto", late)],
+        "id string, representation_id string, premis_stored_at string,"
+        "ebucore_has_mime_type string, schema_name string, updated_at timestamp",
+    ).write.parquet(os.path.join(cat_dir, "file.parquet"))
+    spark.createDataFrame([("f1",)], "file_id string").write.parquet(
+        os.path.join(cat_dir, "includes.parquet")
+    )
+    wm_dir = str(tmp_path / "wm")
+    cfg = PipelineConfig(
+        catalog_dir=cat_dir, objects_target=str(tmp_path / "objects"), watermark_dir=wm_dir,
+        full_sync=True,
+    )
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        assert run_pipeline(spark, cfg) == {"processed": 1, "failed": 0}
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert WatermarkStore(wm_dir).load() == "2024-01-13"
+
+
+def test_object_writer_puts_while_upstream_still_yields(spark, tmp_path):
+    """During its action the writer gets Arrow batches of a few rows, so
+    its first PUT lands while the upstream is still producing: 40 rows
+    yielded one every 0.05 s do not reach the writer as one batch after
+    the last row. Each row carries 64 KB, a Python worker's output buffer
+    (``spark.buffer.size``), so the upstream worker sends every row as it
+    yields it; tiny rows would sit in that buffer until the last one."""
+    from prefect_flow_arc_alto_to_json_spark.sinks import write_json_objects
+
+    stamps = str(tmp_path / "stamps")
+    os.makedirs(stamps)
+
+    def slow_rows(batches, stamps=stamps):
+        import os
+        import time
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        for i in range(40):
+            time.sleep(0.05)
+            if i == 39:
+                with open(os.path.join(stamps, "last_row"), "w") as f:
+                    f.write(repr(time.time()))
+            doc = f'{{"i": {i}, "pad": "{"x" * 65536}"}}'
+            yield pd.DataFrame({"s3_key": [f"{i}.json"], "json": [doc]})
+
+    def factory(stamps=stamps):
+        import os
+        import time
+        import types
+
+        def put_object(Bucket, Key, Body):
+            with open(os.path.join(stamps, f"put-{Key.replace('/', '_')}"), "w") as f:
+                f.write(repr(time.time()))
+
+        return types.SimpleNamespace(put_object=put_object)
+
+    upstream = spark.range(1, numPartitions=1).mapInPandas(slow_rows, "s3_key string, json string")
+    write_json_objects(upstream, "s3://bkt/out", client_factory=factory)
+
+    def stamp(name: str) -> float:
+        with open(os.path.join(stamps, name)) as f:
+            return float(f.read())
+
+    puts = [stamp(n) for n in os.listdir(stamps) if n.startswith("put-")]
+    assert len(puts) == 40
+    assert min(puts) < stamp("last_row")
 
 
 def test_rerun_leaves_identical_state(spark, catalog, tmp_path):
