@@ -107,19 +107,24 @@ def _description(doc: Column, is_v2: Column) -> Column:
     )
 
 
-#: xml_col -> (JVM gateway, (parse, simplified, error)) — see _alto_columns.
-_BUILT: dict[str, tuple[object, tuple[Column, Column, Column]]] = {}
+def simplify_alto(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    """Full per-document transform: parse → extract.
 
+    Adds ``simplified`` (struct<description, text> — SIMPLIFIED_DOC_SCHEMA
+    shape) and ``alto_error`` (null | 'Unsupported Alto format', the default
+    branch js:24044-24058).
 
-def _alto_columns(gateway, xml_col: str) -> tuple[Column, Column, Column]:
-    """The three Columns of :func:`simplify_alto`, built once per
-    ``xml_col`` and JVM gateway. Building them is about 1,500 py4j calls
-    (0.3–0.4 s a night); a Column is an unresolved expression, so the same
-    objects serve every DataFrame of the JVM that holds them. A restarted
-    gateway is a new JVM, so it rebuilds them."""
-    cached = _BUILT.get(xml_col)
-    if cached is not None and cached[0] is gateway:
-        return cached[1]
+    ``from_xml`` is Spark-native (JVM, no Python boundary) and mirrors the
+    reference's xml2js call (js:24064): arrays at every level (the
+    ``explicitArray: true`` shape, js:19016) and values left untrimmed
+    (``trim: false``). It runs in its own projection, once per row.
+
+    One description and one text array serve both versions. The document
+    is null unless the namespace is v2 or v3, so an unsupported one reads
+    as an all-null description and a null text. One filter carries both
+    version rules: v2 drops missing and empty CONTENT, v3 keeps every
+    String. ``fileName`` is read for v2 only.
+    """
     parsed = F.col("__alto_parsed")
     ns = parsed.getField("_xmlns")
     is_v2, is_v3 = ns == ALTO_NS_V2, ns == ALTO_NS_V3
@@ -138,35 +143,8 @@ def _alto_columns(gateway, xml_col: str) -> tuple[Column, Column, Column]:
         F.lit(UNSUPPORTED_FORMAT_ERROR)
     )
     options = {"attributePrefix": "_", "ignoreSurroundingSpaces": "false"}
-    parse = F.from_xml(F.col(xml_col), ALTO_SCHEMA, options)
-    _BUILT[xml_col] = (gateway, (parse, simplified, error))
-    return parse, simplified, error
-
-
-def simplify_alto(df: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """Full per-document transform: parse → extract.
-
-    Adds ``simplified`` (struct<description, text> — SIMPLIFIED_DOC_SCHEMA
-    shape) and ``alto_error`` (null | 'Unsupported Alto format', the default
-    branch js:24044-24058).
-
-    ``from_xml`` is Spark-native (JVM, no Python boundary) and mirrors the
-    reference's xml2js call (js:24064): arrays at every level (the
-    ``explicitArray: true`` shape, js:19016) and values left untrimmed
-    (``trim: false``). It runs in its own projection, once per row.
-
-    One description and one text array serve both versions. The document
-    is null unless the namespace is v2 or v3, so an unsupported one reads
-    as an all-null description and a null text. One filter carries both
-    version rules: v2 drops missing and empty CONTENT, v3 keeps every
-    String. ``fileName`` is read for v2 only.
-
-    The expressions are built once per ``xml_col`` and reused
-    (:func:`_alto_columns`).
-    """
-    parse, simplified, error = _alto_columns(df.sparkSession.sparkContext._gateway, xml_col)
     return (
-        df.withColumn("__alto_parsed", parse)
+        df.withColumn("__alto_parsed", F.from_xml(F.col(xml_col), ALTO_SCHEMA, options))
         .withColumns({"simplified": simplified, "alto_error": error})
         .drop("__alto_parsed")
     )

@@ -35,7 +35,7 @@ from .operators.alto import simplified_json, simplify_alto, transcript
 from .schemas import FILE_SCHEMA, INCLUDES_SCHEMA
 from .sinks import write_json_objects
 from .sources.fetch import fetch_urls
-from .streaming.watermark import WatermarkStore, incremental_filter
+from .streaming.watermark import WatermarkStore, incremental_filter, watermark_of
 
 
 @dataclass
@@ -119,10 +119,9 @@ def run_pipeline(
     its whole task chain :59-63 — at 100 TB that policy would be
     unusable). An ``observe()`` on the same action yields both outcome
     counts and the date of max(updated_at) over every selected row, saved
-    as the watermark once the action has succeeded. The date is formatted
-    inside Spark, in the session time zone the next night's
-    ``updated_at >= since`` filter reads it in; a timestamp collected to
-    Python would be converted in the driver process's local zone instead.
+    as the watermark once the action has succeeded. The date is the one
+    in the session time zone, where the next night's ``updated_at >=
+    since`` filter reads it (``streaming/watermark.py:watermark_of``).
     """
     store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
     since = store.load() if store else None
@@ -134,7 +133,7 @@ def run_pipeline(
         outcome,
         F.count_if(is_ok).alias("processed"),
         F.count_if(~is_ok).alias("failed"),
-        F.date_format(F.max("updated_at"), "yyyy-MM-dd").alias("watermark"),
+        watermark_of("updated_at").alias("watermark"),
     )
     statements = []
     if representation_conn_factory is not None:

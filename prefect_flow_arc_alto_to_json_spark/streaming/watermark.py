@@ -17,12 +17,9 @@ from __future__ import annotations
 
 import json
 import os
-from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-WATERMARK_FORMAT = "%Y-%m-%d"  # the reference's format (flows/main_flow.py:130)
 
 
 class WatermarkStore:
@@ -38,16 +35,24 @@ class WatermarkStore:
         except (FileNotFoundError, KeyError, json.JSONDecodeError):
             return None
 
-    def save(self, value: str | datetime) -> None:
-        """Persist the new watermark; call only after every sink committed
-        (reference: save_last_run_config on_completion)."""
-        if isinstance(value, datetime):
-            value = value.strftime(WATERMARK_FORMAT)
+    def save(self, value: str) -> None:
+        """Persist the new watermark, a :func:`watermark_of` value; call
+        only after every sink committed (reference: save_last_run_config
+        on_completion)."""
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         tmp = f"{self.path}.tmp-{os.getpid()}"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"since": value}, f)
         os.replace(tmp, self.path)
+
+
+def watermark_of(col: str = "updated_at") -> Column:
+    """Aggregate: the date of ``max(col)`` as '%Y-%m-%d', the reference's
+    format (flows/main_flow.py:130). Formatted inside Spark, so the date is
+    the one in the session time zone, where :func:`incremental_filter`
+    reads it the next night; a timestamp collected to Python would be
+    converted in the driver process's local zone instead."""
+    return F.date_format(F.max(col), "yyyy-MM-dd")
 
 
 def incremental_filter(

@@ -155,19 +155,3 @@ def test_narrow_plan_no_shuffle(spark):
     out = simplify_alto(df).withColumn("transcript", transcript("simplified"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_columns_built_once_per_column_and_gateway(spark):
-    """simplify_alto reuses its Columns for the same input column and JVM
-    gateway, and builds new ones for another column or a new gateway;
-    reused Columns give the same result on a fresh DataFrame."""
-    from prefect_flow_arc_alto_to_json_spark.operators.alto import _alto_columns
-
-    gateway = spark.sparkContext._gateway
-    first = _alto_columns(gateway, "xml")
-    assert _alto_columns(gateway, "xml") is first
-    assert _alto_columns(gateway, "body") is not first
-    assert _alto_columns(object(), "xml") is not first
-    df = _load(spark, "alto_v2")
-    runs = [simplify_alto(df).select(transcript("simplified")).first()[0] for _ in range(2)]
-    assert runs == ["Hello world again block2"] * 2

@@ -281,18 +281,22 @@ def test_watermark_is_the_session_zone_date(spark, tmp_path, monkeypatch):
 
 
 def test_object_writer_puts_while_upstream_still_yields(spark, tmp_path):
-    """During its action the writer gets Arrow batches of a few rows, so
-    its first PUT lands while the upstream is still producing: 40 rows
-    yielded one every 0.05 s do not reach the writer as one batch after
-    the last row. Each row carries 64 KB, a Python worker's output buffer
+    """During its action the writer gets Arrow batches of
+    ``WRITER_BATCH_ROWS`` rows, so its first PUT lands while the upstream
+    is still producing: two batches and a few rows more, yielded one every
+    0.05 s, do not reach the writer as one batch after the last row. Each
+    row carries 64 KB, a Python worker's output buffer
     (``spark.buffer.size``), so the upstream worker sends every row as it
     yields it; tiny rows would sit in that buffer until the last one."""
     from prefect_flow_arc_alto_to_json_spark.sinks import write_json_objects
+    from prefect_flow_arc_alto_to_json_spark.sinks.objects import WRITER_BATCH_ROWS
+
+    n = 2 * int(WRITER_BATCH_ROWS) + 8
 
     stamps = str(tmp_path / "stamps")
     os.makedirs(stamps)
 
-    def slow_rows(batches, stamps=stamps):
+    def slow_rows(batches, stamps=stamps, n=n):
         import os
         import time
 
@@ -300,9 +304,9 @@ def test_object_writer_puts_while_upstream_still_yields(spark, tmp_path):
 
         for _ in batches:
             pass
-        for i in range(40):
+        for i in range(n):
             time.sleep(0.05)
-            if i == 39:
+            if i == n - 1:
                 with open(os.path.join(stamps, "last_row"), "w") as f:
                     f.write(repr(time.time()))
             doc = f'{{"i": {i}, "pad": "{"x" * 65536}"}}'
@@ -327,7 +331,7 @@ def test_object_writer_puts_while_upstream_still_yields(spark, tmp_path):
             return float(f.read())
 
     puts = [stamp(n) for n in os.listdir(stamps) if n.startswith("put-")]
-    assert len(puts) == 40
+    assert len(puts) == n
     assert min(puts) < stamp("last_row")
 
 
