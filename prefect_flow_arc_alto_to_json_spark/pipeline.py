@@ -13,7 +13,12 @@ Reference stages → engine stages:
      subprocess boundary dissolves into the plan (SURVEY.md §2.10 U1).
 4. transcript agg (:65-70) → transcript() array_join (order-safe).
 5. sinks (:94-103,141-147) → write_json_objects, the one action: per
-   partition the objects, then the UPDATE, then the INSERT.
+   partition the objects, then the UPDATE, then the INSERT. A one-row job
+   of the action's shape (``mapInPandas`` then ``mapInArrow``) runs on a
+   background thread while the driver builds the plan: it starts the
+   Python workers the action's task then takes from the idle pool, so
+   their cold start (daemon, forks, pandas/pyarrow imports, the JVM's
+   first Arrow use) overlaps planning instead of following it.
 6. watermark save on completion (:114) → counts and the date of
    max(updated_at) from the action's ``observe()``; WatermarkStore.save
    after it succeeds.
@@ -27,6 +32,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +42,10 @@ from .schemas import FILE_SCHEMA, INCLUDES_SCHEMA
 from .sinks import write_json_objects
 from .sources.fetch import fetch_urls
 from .streaming.watermark import WatermarkStore, incremental_filter, watermark_of
+
+
+#: Name of the thread :func:`run_pipeline` starts the Python workers on.
+WORKER_START_THREAD = "run_pipeline-worker-start"
 
 
 @dataclass
@@ -100,6 +110,25 @@ def transform(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _start_python_workers(spark: SparkSession) -> None:
+    """Run a one-row job shaped like the action's task: a ``mapInPandas``
+    feeding a ``mapInArrow``, both identity functions, driven by a
+    ``noop`` write. It forks the task's two Python workers, which import
+    pandas and pyarrow, and loads the JVM's Arrow path; with
+    ``spark.python.worker.reuse`` (the default) the workers then wait in
+    the idle pool for the action's task. The functions are lambdas, so
+    they ship by value and need no package on the executor."""
+    spark.sparkContext.setJobDescription("run_pipeline: start the Python workers")
+    one_row = spark.range(0, 1, 1, 1)
+    (
+        one_row.mapInPandas(lambda frames: frames, one_row.schema)
+        .mapInArrow(lambda batches: batches, one_row.schema)
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     cfg: PipelineConfig,
@@ -122,45 +151,60 @@ def run_pipeline(
     as the watermark once the action has succeeded. The date is the one
     in the session time zone, where the next night's ``updated_at >=
     since`` filter reads it (``streaming/watermark.py:watermark_of``).
-    """
-    store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
-    since = store.load() if store else None
 
-    work = catalog_scan(spark, cfg.catalog_dir, since, cfg.full_sync)
-    is_ok = F.col("fetch_error").isNull() & F.col("alto_error").isNull()
-    outcome = Observation()
-    result = transform(work, cfg).observe(
-        outcome,
-        F.count_if(is_ok).alias("processed"),
-        F.count_if(~is_ok).alias("failed"),
-        watermark_of("updated_at").alias("watermark"),
+    Before anything else, :func:`_start_python_workers` runs on a
+    background thread: a cold process spends about as long starting the
+    action's Python workers as the driver spends building the plan, so
+    the two overlap. The thread inherits the caller's job group and is
+    joined before this function returns or raises, so no job outlives
+    the call. The action does not depend on it: had it failed, the
+    action's task would start its own workers.
+    """
+    workers = InheritableThread(
+        target=_start_python_workers, args=(spark,), name=WORKER_START_THREAD
     )
-    statements = []
-    if representation_conn_factory is not None:
-        statements.append((
-            representation_conn_factory,
-            "UPDATE representation SET schema_transcript = ? WHERE id = ?",
-            ["schema_transcript", "representation_id"],
-        ))
-    if transcript_url_conn_factory is not None:
-        statements.append((
-            transcript_url_conn_factory,
-            "INSERT INTO schema_transcript_url (representation_id, schema_transcript_url) "
-            "SELECT ?, ? WHERE NOT EXISTS (SELECT 1 FROM schema_transcript_url "
-            "WHERE representation_id = ? AND schema_transcript_url = ?)",
-            ["representation_id", "schema_transcript_url"] * 2,
-        ))
-    write_json_objects(
-        result.where(is_ok),
-        cfg.objects_target,
-        key_col="s3_key",
-        json_col="json",
-        # None -> the default boto3 client; tests inject a moto-endpoint
-        # factory (the reference's endpoint override, main_flow.py:126)
-        client_factory=objects_client_factory,
-        statements=statements,
-    )
-    counts = outcome.get
-    if store is not None and counts["watermark"] is not None:
-        store.save(counts["watermark"])
-    return {"processed": counts["processed"], "failed": counts["failed"]}
+    workers.start()
+    try:
+        store = WatermarkStore(cfg.watermark_dir) if cfg.watermark_dir else None
+        since = store.load() if store else None
+
+        work = catalog_scan(spark, cfg.catalog_dir, since, cfg.full_sync)
+        is_ok = F.col("fetch_error").isNull() & F.col("alto_error").isNull()
+        outcome = Observation()
+        result = transform(work, cfg).observe(
+            outcome,
+            F.count_if(is_ok).alias("processed"),
+            F.count_if(~is_ok).alias("failed"),
+            watermark_of("updated_at").alias("watermark"),
+        )
+        statements = []
+        if representation_conn_factory is not None:
+            statements.append((
+                representation_conn_factory,
+                "UPDATE representation SET schema_transcript = ? WHERE id = ?",
+                ["schema_transcript", "representation_id"],
+            ))
+        if transcript_url_conn_factory is not None:
+            statements.append((
+                transcript_url_conn_factory,
+                "INSERT INTO schema_transcript_url (representation_id, schema_transcript_url) "
+                "SELECT ?, ? WHERE NOT EXISTS (SELECT 1 FROM schema_transcript_url "
+                "WHERE representation_id = ? AND schema_transcript_url = ?)",
+                ["representation_id", "schema_transcript_url"] * 2,
+            ))
+        write_json_objects(
+            result.where(is_ok),
+            cfg.objects_target,
+            key_col="s3_key",
+            json_col="json",
+            # None -> the default boto3 client; tests inject a moto-endpoint
+            # factory (the reference's endpoint override, main_flow.py:126)
+            client_factory=objects_client_factory,
+            statements=statements,
+        )
+        counts = outcome.get
+        if store is not None and counts["watermark"] is not None:
+            store.save(counts["watermark"])
+        return {"processed": counts["processed"], "failed": counts["failed"]}
+    finally:
+        workers.join()

@@ -28,12 +28,25 @@ class WatermarkStore:
 
     def load(self) -> str | None:
         """Last successful run's watermark value ('%Y-%m-%d' string), or
-        None for a first/full run (reference: get_last_run_config)."""
+        None when no file exists yet: a first run (reference:
+        get_last_run_config).
+
+        A file that exists but holds no ``since`` string (truncated, or
+        written by something else) raises ``ValueError``: reading it as a
+        first run would drop the ``updated_at >= since`` predicate and
+        select the whole catalog."""
         try:
             with open(self.path, encoding="utf-8") as f:
-                return json.load(f)["since"]
-        except (FileNotFoundError, KeyError, json.JSONDecodeError):
+                text = f.read()
+        except FileNotFoundError:
             return None
+        try:
+            since = json.loads(text)["since"]
+        except (json.JSONDecodeError, KeyError, TypeError):
+            since = None
+        if not isinstance(since, str):
+            raise ValueError(f"corrupt watermark file {self.path}: {text[:80]!r}")
+        return since
 
     def save(self, value: str) -> None:
         """Persist the new watermark, a :func:`watermark_of` value; call

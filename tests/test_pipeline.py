@@ -10,12 +10,14 @@ import datetime
 import json
 import os
 import sqlite3
+import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from prefect_flow_arc_alto_to_json_spark.pipeline import (
+    WORKER_START_THREAD,
     PipelineConfig,
     catalog_scan,
     run_pipeline,
@@ -237,10 +239,12 @@ def test_pipeline_is_one_action(spark, catalog, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("test-pipeline-one-action")
-    # the includes broadcast and the one action: the catalog is read with
-    # its known schema, so no parquet schema inference runs, and the sinks
-    # and counts ride on the action instead of jobs of their own
-    assert len(jobs) == 2
+    # the includes broadcast, the one-row job that starts the action's
+    # Python workers while the plan is built, and the one action: the
+    # catalog is read with its known schema, so no parquet schema
+    # inference runs, and the sinks and counts ride on the action instead
+    # of jobs of their own
+    assert len(jobs) == 3
     assert {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} <= cached_before
     assert counts == {"processed": 3, "failed": 2}
     # max(updated_at) over every selected row, the two failed ones included
@@ -371,10 +375,16 @@ def _dir_s3_factory(root: str, fail_on_put: int | None = None):
     return factory
 
 
+def _worker_start_threads() -> list:
+    return [t for t in threading.enumerate() if t.name == WORKER_START_THREAD]
+
+
 def test_sink_dying_mid_partition_commits_nothing(spark, catalog, tmp_path):
     """An object PUT that fails after the first document's object: the run
     raises, commits no UPDATE and no URL row and saves no watermark; a
-    rerun with a healthy store ends where a clean run ends."""
+    rerun with a healthy store ends where a clean run ends. Neither the
+    failed run nor a clean one leaves the worker-start thread running or
+    a session conf changed."""
     from prefect_flow_arc_alto_to_json_spark.streaming.watermark import WatermarkStore
 
     # one parquet file per table, so the three ok documents share one
@@ -384,14 +394,19 @@ def test_sink_dying_mid_partition_commits_nothing(spark, catalog, tmp_path):
         spark.read.parquet(os.path.join(catalog, table)).coalesce(1).write.parquet(
             os.path.join(one_file, table)
         )
+    conf_before = dict(spark.conf.getAll)
     clean_db, clean_objects = _sink_db(tmp_path / "clean.db"), str(tmp_path / "clean")
     _run(spark, one_file, clean_db, "s3://bkt/out", str(tmp_path / "wm_clean"),
          _dir_s3_factory(clean_objects))
+    assert _worker_start_threads() == []
+    assert dict(spark.conf.getAll) == conf_before
 
     db_path, objects = _sink_db(tmp_path / "sink.db"), str(tmp_path / "puts")
     wm_dir = str(tmp_path / "wm")
     with pytest.raises(Exception, match="injected: object store went away"):
         _run(spark, one_file, db_path, "s3://bkt/out", wm_dir, _dir_s3_factory(objects, 2))
+    assert _worker_start_threads() == []
+    assert dict(spark.conf.getAll) == conf_before
     reps, urls, written = _sink_state(db_path, objects)
     assert all(transcript is None for _, transcript in reps)
     assert urls == []
@@ -401,6 +416,35 @@ def test_sink_dying_mid_partition_commits_nothing(spark, catalog, tmp_path):
     _run(spark, one_file, db_path, "s3://bkt/out", wm_dir, _dir_s3_factory(objects))
     assert _sink_state(db_path, objects) == _sink_state(clean_db, clean_objects)
     assert WatermarkStore(wm_dir).load() == "2024-01-13"
+
+
+@pytest.mark.parametrize("text", ['{"since": "2024-01-1', "{}"], ids=["truncated", "no_since"])
+def test_corrupt_watermark_raises(spark, catalog, tmp_path, text):
+    """Only a missing file means a first run. A truncated file, or one
+    without ``since``, raises: read as no watermark, it would drop the
+    ``updated_at >= since`` predicate and select the whole catalog. The
+    night fails before its action, writes nothing, and joins the
+    worker-start thread."""
+    from prefect_flow_arc_alto_to_json_spark.streaming.watermark import WatermarkStore
+
+    store = WatermarkStore(str(tmp_path / "wm"))
+    assert store.load() is None
+    os.makedirs(os.path.dirname(store.path))
+    with open(store.path, "w", encoding="utf-8") as f:
+        f.write(text)
+    with pytest.raises(ValueError, match="corrupt watermark file"):
+        store.load()
+
+    cfg = PipelineConfig(
+        catalog_dir=catalog, objects_target=str(tmp_path / "objects"),
+        watermark_dir=str(tmp_path / "wm"),
+    )
+    with pytest.raises(ValueError, match="corrupt watermark file"):
+        run_pipeline(spark, cfg)
+    assert not os.path.exists(tmp_path / "objects")
+    assert _worker_start_threads() == []
+    with open(store.path, encoding="utf-8") as f:
+        assert f.read() == text
 
 
 def test_object_writer_statements_get_python_values(spark, tmp_path):
