@@ -1,17 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring a production ANN stack:
+Every top-k search here is one filter-and-refine shape (REPOSE, ICDE
+2021; the incremental top-k framework, EDBT 2020):
 
-- **brute force** — exact cosine top-k: broadcast the (small) query set
-  against the corpus, score with JVM array HOFs, rank with a window. The
-  correctness baseline every approximate method is judged against.
-- **random-hyperplane LSH** — sign-pattern bucketing: 2^P buckets from P
-  fixed hyperplanes; queries only score their own bucket. Linear-scan →
-  bucket-join turns a 100 TB corpus scan per query into a bucket-cardinality
-  probe; recall is tunable via P and multi-probe (flip one bit).
+1. **candidates** — which (query, neighbor) pairs get scored at all: the
+   whole corpus (brute force, numpy, int8), the query's LSH buckets
+   (2^P sign-pattern buckets from P fixed hyperplanes, plus one-bit
+   multi-probe), its ``n_probe`` nearest IVF cells (:func:`_ivf_probes`),
+   or a PQ asymmetric-distance shortlist over compressed codes
+   (:func:`_pq_lut`);
+2. **exact rerank** — the double cosine over the survivors; the
+   shortlist paths re-fetch only the candidates' float vectors by id
+   (:func:`_exact_rerank`);
+3. **total-order top-k** — one per-query window, (score DESC, id ASC),
+   so ties never make a rank engine-dependent (:func:`_topk`); Spark 4's
+   WindowGroupLimit pushes the limit below the window's shuffle.
 
-All arithmetic in double (cast once from float32) so results reproduce in
-the DuckDB oracle exactly; no Python UDFs anywhere.
+Brute force is the correctness baseline every approximate path is judged
+against. All arithmetic in double (cast once from float32) so results
+reproduce in the DuckDB oracle exactly; Python workers run only in the
+numpy scorer and kmeans_refine's centroid means.
 """
 
 from __future__ import annotations
@@ -58,6 +66,50 @@ def _as_double(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _topk(
+    scored: DataFrame, k: int, score: str, tie: str, rank: str = "rank"
+) -> DataFrame:
+    """The ``k`` best rows per ``query_id`` under the total order
+    (``score`` DESC, ``tie`` ASC), numbered 1..k in ``rank`` — the one
+    per-query top-k behind every ranked output, probe pick and shortlist
+    here. The tie column makes the order total, so ranks and cut-offs
+    reproduce in any engine."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(tie))
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Refine stage: re-score ``(query_id, neighbor_id)`` candidates with
+    the exact double cosine and keep the top ``k`` per query. Only the
+    candidates' float vectors are fetched — an id equi-join against the
+    corpus, at scale a bucketed or partition-pruned point lookup of
+    |candidates| rows, never a corpus scan. Returns (query_id,
+    neighbor_id, cosine, rank)."""
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qa")
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cb")
+    )
+    exact = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qa"), F.col("cb")), 6).alias("cosine"),
+        )
+    )
+    return _topk(exact, k, "cosine", "neighbor_id")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -88,13 +140,7 @@ def brute_force_topk(
             F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(scored, k, "cosine", "neighbor_id")
 
 
 def _bucket(vec: str, planes: int = LSH_PLANES, first_plane: int = 0) -> Column:
@@ -254,13 +300,7 @@ def lsh_bucketed_topk(
             f"{_sql_cosine6('qvec', 'cvec')} AS cosine",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(scored, k, "cosine", "neighbor_id")
 
 
 def derive_planes(
@@ -431,20 +471,7 @@ def ivf_topk(
     Returns (query_id, neighbor_id, cosine, rank).
     """
     cents, assigned = ivf_index(corpus, n_centroids, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
-    )
-    qdist = q.join(F.broadcast(cents)).select(
-        "query_id", "qvec", "cent_id", dot(F.col("qvec"), F.col("cvec")).alias("sim")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cent_id")
-    )
-    probes = (
-        qdist.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", "qvec", "cent_id")
-    )
+    probes = _ivf_probes(queries, cents, n_probe, id_col, vec_col)
     scored = (
         assigned.join(F.broadcast(probes), "cent_id")
         .where(F.col("vid") != F.col("query_id"))
@@ -454,12 +481,24 @@ def ivf_topk(
             F.round(cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
+    return _topk(scored, k, "cosine", "neighbor_id")
+
+
+def _ivf_probes(
+    queries: DataFrame, cents: DataFrame, n_probe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, qvec, cent_id): each query's ``n_probe`` nearest IVF
+    cells by dot product, ties toward the smaller cent_id — the candidate
+    filter of :func:`ivf_topk` and :func:`ivfadc_topk`. |queries| x C
+    rows against the broadcast centroids; no corpus row is touched."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    qdist = q.join(F.broadcast(cents)).select(
+        "query_id", "qvec", "cent_id", dot(F.col("qvec"), F.col("cvec")).alias("sim")
+    )
+    return _topk(qdist, n_probe, "sim", "cent_id", rank="pr").select(
+        "query_id", "qvec", "cent_id"
     )
 
 
@@ -528,13 +567,7 @@ def brute_force_topk_np(
     scored = fan_out(corpus).select(id_col, vec_col).mapInPandas(
         score, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(scored, k, "cosine", "neighbor_id")
 
 
 def kmeans_refine(
@@ -671,12 +704,7 @@ def int8_topk(
             ).alias("cosine_q8"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q8").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _topk(scored, k, "cosine_q8", "neighbor_id")
 
 
 def ivf_assign_probes(
@@ -977,27 +1005,7 @@ def two_stage_topk(
     """
     cand = int8_topk(corpus, queries, k=shortlist, id_col=id_col, vec_col=vec_col)
     cand = cand.select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qa")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cb")
-    )
-    exact = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qa"), F.col("cb")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
 
 
 #: Product quantization layout: EMB_DIM is split into PQ_SUBSPACES
@@ -1089,18 +1097,39 @@ def pq_topk(
     Returns (query_id, neighbor_id, cosine, rank).
     """
     cb, enc = pq_index(corpus, n_subspaces, n_codes, id_col, vec_col)
+    lut = _pq_lut(queries, cb, n_subspaces, id_col, vec_col)
+    adc = (
+        enc.join(F.broadcast(lut), ["m", "code"])
+        .where(F.col("vid") != F.col("query_id"))
+        .groupBy("query_id", "vid")
+        .agg(F.sum("pm").alias("am"))
+    )
+    cand = _topk(adc, shortlist, "am", "vid", rank="sr").select(
+        "query_id", F.col("vid").alias("neighbor_id")
+    )
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+
+
+def _pq_lut(
+    queries: DataFrame, cb: DataFrame, n_subspaces: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, m, code, pm): the per-query ADC lookup table
+    LUT[m, code] = <q_m, c_m> over the :func:`pq_index` codebook, each
+    partial micro-snapped (1e-6) to a long so the per-candidate sum is
+    associative-exact. |queries| * n_subspaces * n_codes rows — small
+    enough to broadcast into the encoded corpus."""
     d = EMB_DIM // n_subspaces
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
     )
-    sub = corpus.sparkSession.range(n_subspaces).select(
+    sub = queries.sparkSession.range(n_subspaces).select(
         F.col("id").cast("int").alias("m")
     )
     partial = F.expr(
         f"aggregate(sequence(1, {d}), 0D, (acc, i) -> acc + "
         f"element_at(qvec, m*{d}+i) * element_at(cvec, m*{d}+i))"
     )
-    lut = (
+    return (
         q.join(F.broadcast(sub))
         .join(F.broadcast(cb))
         .select(
@@ -1109,39 +1138,6 @@ def pq_topk(
             "code",
             F.round(partial * 1000000.0, 0).cast("long").alias("pm"),
         )
-    )
-    adc = (
-        enc.join(F.broadcast(lut), ["m", "code"])
-        .where(F.col("vid") != F.col("query_id"))
-        .groupBy("query_id", "vid")
-        .agg(F.sum("pm").alias("am"))
-    )
-    wshort = Window.partitionBy("query_id").orderBy(
-        F.col("am").desc(), F.col("vid")
-    )
-    cand = (
-        adc.withColumn("sr", F.row_number().over(wshort))
-        .where(F.col("sr") <= shortlist)
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-    )
-    qv = q.select("query_id", F.col("qvec").alias("qa"))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cb")
-    )
-    exact = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qa"), F.col("cb")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
     )
 
 
@@ -1227,46 +1223,15 @@ def ivfadc_topk(
     """
     cents, assigned = ivf_index(corpus, n_centroids, id_col, vec_col)
     cb, enc = pq_index(corpus, n_subspaces, n_codes, id_col, vec_col)
-    d = EMB_DIM // n_subspaces
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
-    )
-    qdist = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "cent_id",
-        dot(F.col("qvec"), F.col("cvec")).alias("sim"),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cent_id")
-    )
-    probes = (
-        qdist.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", "cent_id")
+    probes = _ivf_probes(queries, cents, n_probe, id_col, vec_col).select(
+        "query_id", "cent_id"
     )
     cand = (
         assigned.join(F.broadcast(probes), "cent_id")
         .where(F.col("vid") != F.col("query_id"))
         .select("query_id", "vid")
     )
-    sub = corpus.sparkSession.range(n_subspaces).select(
-        F.col("id").cast("int").alias("m")
-    )
-    partial = F.expr(
-        f"aggregate(sequence(1, {d}), 0D, (acc, i) -> acc + "
-        f"element_at(qvec, m*{d}+i) * element_at(cvec, m*{d}+i))"
-    )
-    lut = (
-        q.join(F.broadcast(sub))
-        .join(F.broadcast(cb))
-        .select(
-            "query_id",
-            "m",
-            "code",
-            F.round(partial * 1000000.0, 0).cast("long").alias("pm"),
-        )
-    )
+    lut = _pq_lut(queries, cb, n_subspaces, id_col, vec_col)
     # the candidate relation is |q|·cell·n_probe rows — query-bounded, so
     # it broadcasts into the (corpus-sized) encoded relation; for a
     # corpus-sized offline query set swap to a shuffle-hash hint instead
@@ -1276,33 +1241,10 @@ def ivfadc_topk(
         .groupBy("query_id", "vid")
         .agg(F.sum("pm").alias("am"))
     )
-    wshort = Window.partitionBy("query_id").orderBy(
-        F.col("am").desc(), F.col("vid")
+    short = _topk(adc, shortlist, "am", "vid", rank="sr").select(
+        "query_id", F.col("vid").alias("neighbor_id")
     )
-    short = (
-        adc.withColumn("sr", F.row_number().over(wshort))
-        .where(F.col("sr") <= shortlist)
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-    )
-    qv = q.select("query_id", F.col("qvec").alias("qa"))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cb")
-    )
-    exact = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qa"), F.col("cb")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(short, queries, corpus, k, id_col, vec_col)
 
 
 def jl_sign_matrix(dims_in: int, dims_out: int, salt: str = "jl-v1"):

@@ -195,8 +195,6 @@ def run_pipeline(
         write_json_objects(
             result.where(is_ok),
             cfg.objects_target,
-            key_col="s3_key",
-            json_col="json",
             # None -> the default boto3 client; tests inject a moto-endpoint
             # factory (the reference's endpoint override, main_flow.py:126)
             client_factory=objects_client_factory,

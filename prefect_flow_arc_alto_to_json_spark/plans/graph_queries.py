@@ -27,6 +27,51 @@ _SQL_EDGES = """
     GROUP BY 1, 2
 """
 
+
+def _trade_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The join of ``_SQL_EDGES`` before its GROUP BY: one row per
+    lineitem with its customer, supplier and their nations (and the
+    order date, for graphs cut by time). The q7 join shape: the facts
+    shuffle on orderkey, the two dimensions broadcast. Column pruning
+    drops whatever a caller does not read."""
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    return (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
+        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+    )
+
+
+def _trade_edges(lines: DataFrame) -> DataFrame:
+    """``(src, dst, w)`` nation trade edges over :func:`_trade_lines`
+    rows — customer's nation → supplier's nation, weighted by lineitem
+    count: the Spark side of ``_SQL_EDGES``."""
+    return lines.groupBy(
+        F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
+    ).agg(F.count(F.lit(1)).alias("w"))
+
+
+def _strong_edges(edges: DataFrame) -> DataFrame:
+    """The STRONG-ROUTE subgraph ``src <> dst AND w * n >= tot``: edges
+    whose weight is at least the mean, compared in exact integers (no
+    float mean), self-loops dropped. The totals are a 1-row broadcast
+    cross join, never a driver collect."""
+    tot = edges.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
+    return (
+        edges.crossJoin(F.broadcast(tot))
+        .where(
+            (F.col("src") != F.col("dst"))
+            & (F.col("w") * F.col("n") >= F.col("tot"))
+        )
+        .select("src", "dst", "w")
+    )
+
+
 _SQL_ITER = """
     r{K} AS (
       SELECT n2.node,
@@ -88,28 +133,7 @@ def q_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import pagerank
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     return pagerank(edges, iterations=3).select(
         F.col("node").cast("long").alias("node"), "rank_nano"
     )
@@ -150,20 +174,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import triangle_counts
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     return triangle_counts(edges).select(
         F.col("node").cast("long").alias("node"), "n_tri"
     )
@@ -205,20 +216,7 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     closures belong to the iterative operators (dedup.connected_
     components), which checkpoint per level.
     """
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     edges.createOrReplaceTempView("edges")
     return spark.sql("WITH RECURSIVE " + _SQL_REACH_BODY)
 
@@ -387,28 +385,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark loop is the shape a billion-edge graph runs."""
     from ..operators.graph import lpa_communities
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     labels = lpa_communities(edges, iterations=3)
     sizes = labels.groupBy("community").agg(
         F.count(F.lit(1)).alias("n_members")
@@ -484,28 +461,7 @@ def q_hits_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; checkpoint-truncated lineage, no driver state."""
     from ..operators.graph import hits_scores
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     return hits_scores(edges, iterations=2).select(
         F.col("node").cast("long").alias("node"),
         "hub_micro",
@@ -558,34 +514,10 @@ def q_bellman_ford_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining MIN."""
     from ..operators.graph import bellman_ford
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .select(
-            "src",
-            "dst",
-            (F.floor(F.lit(1000000.0) / F.col("w")).cast("long") + 1).alias(
-                "cost"
-            ),
-        )
+    edges = _trade_edges(_trade_lines(spark, sf_dir)).select(
+        "src",
+        "dst",
+        (F.floor(F.lit(1000000.0) / F.col("w")).cast("long") + 1).alias("cost"),
     )
     return bellman_ford(edges, source=0, rounds=3).select(
         F.col("node").cast("long").alias("node"), "dist"
@@ -642,18 +574,8 @@ def q_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, long) edge relation, lineage truncated per round."""
     from ..operators.graph import kcore_peel
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey")
     ce = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        _trade_lines(spark, sf_dir)
         .select(
             F.col("c_custkey").alias("cust"),
             (F.col("s_suppkey") + 1000000).alias("supp"),
@@ -725,20 +647,7 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import clustering_coefficient
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     stats = edges.agg(
         F.sum("w").cast("long").alias("s"),
         F.count(F.lit(1)).alias("ne"),
@@ -840,28 +749,7 @@ def q_spectral_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import spectral_bipartition
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     return spectral_bipartition(edges, iterations=4)
 
 
@@ -951,28 +839,7 @@ def q_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import boruvka_components
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     return boruvka_components(edges, rounds=2, merge_steps=3)
 
 
@@ -1045,31 +912,10 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import personalized_pagerank
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey"
     )
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     seeds = nation.where(F.col("n_regionkey") == 0).select(
         F.col("n_nationkey").alias("node")
     )
@@ -1157,32 +1003,8 @@ def q_scc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import scc_first_peel
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n")
-    )
-    edges = (
-        e0.crossJoin(F.broadcast(tot))
-        .where(
-            (F.col("src") != F.col("dst"))
-            & (F.col("w") * F.col("n") >= F.col("tot"))
-        )
-        .select("src", "dst")
-    )
-    return scc_first_peel(edges, rounds=4)
+    edges = _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
+    return scc_first_peel(edges.select("src", "dst"), rounds=4)
 
 
 _SQL_EDGES_OLD = """
@@ -1273,31 +1095,9 @@ def q_pagerank_warm_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import pagerank, pagerank_resume
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-
-    def build_edges(o: DataFrame) -> DataFrame:
-        return (
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .join(F.broadcast(cust), o["o_custkey"] == cust["c_custkey"])
-            .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-            .groupBy(
-                F.col("c_nationkey").alias("src"),
-                F.col("s_nationkey").alias("dst"),
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-
-    old_edges = build_edges(
-        orders.where(F.col("o_orderdate") < "1999-01-01").select(
-            "o_orderkey", "o_custkey"
-        )
-    )
-    all_edges = build_edges(orders.select("o_orderkey", "o_custkey"))
+    lines = _trade_lines(spark, sf_dir)
+    old_edges = _trade_edges(lines.where(F.col("o_orderdate") < "1999-01-01"))
+    all_edges = _trade_edges(lines)
     r_old = pagerank(old_edges, iterations=3)
     return pagerank_resume(all_edges, r_old, iterations=1)
 
@@ -1376,20 +1176,7 @@ def q_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import pagerank_dangling
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e0 = _trade_edges(_trade_lines(spark, sf_dir))
     from pyspark.sql import Window as W
 
     rn = F.row_number().over(
@@ -1470,20 +1257,7 @@ def q_ktruss_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.graph import ktruss_edges
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e0 = _trade_edges(_trade_lines(spark, sf_dir))
     rn = F.row_number().over(
         W.partitionBy("src").orderBy(F.col("w").desc(), "dst")
     )
@@ -1548,20 +1322,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the dedup posting joins cap df."""
     from ..operators.graph import link_prediction_scores
 
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges(_trade_lines(spark, sf_dir))
     # edges feeds the 1-row total AND the threshold filter: checkpoint so
     # the q7 fact join runs once, not once per consumer
     edges = edges.localCheckpoint()
@@ -1633,22 +1394,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations — salt-free because the per-key payload is a count; m rides
     a 1-row broadcast cross join, never a driver collect.
     """
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
     ce = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        _trade_lines(spark, sf_dir)
         .select(
             "c_custkey",
             "s_suppkey",
@@ -1773,18 +1520,8 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one edge⋈x join + a map-side-combined node agg —
     the pagerank shape exactly; state is node-sized nano longs.
     """
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey")
     ce = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        _trade_lines(spark, sf_dir)
         .select(
             F.col("c_custkey").alias("cust"),
             (F.col("s_suppkey") + 1000000).alias("supp"),
@@ -1868,18 +1605,8 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     is x8 on the node census, and induced edges restrict the edge
     relation through two broadcastable membership joins.
     """
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey")
     und = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        _trade_lines(spark, sf_dir)
         .select(
             F.col("c_custkey").alias("a"),
             (F.col("s_suppkey") + 1000000).alias("b"),
@@ -2004,40 +1731,8 @@ def q_betweenness_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import betweenness_exact
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n")
-    )
-    edges = (
-        e0.crossJoin(F.broadcast(tot))
-        .where(
-            (F.col("src") != F.col("dst"))
-            & (F.col("w") * F.col("n") >= F.col("tot"))
-        )
-        .select("src", "dst")
-    )
-    return betweenness_exact(edges, max_depth=4).select(
+    edges = _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
+    return betweenness_exact(edges.select("src", "dst"), max_depth=4).select(
         F.col("node").cast("long").alias("node"), "bc_micro"
     )
 
@@ -2120,35 +1815,8 @@ def q_graph_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import dominant_edge_matching
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
     und = (
-        e0.crossJoin(F.broadcast(tot))
-        .where(
-            (F.col("src") != F.col("dst"))
-            & (F.col("w") * F.col("n") >= F.col("tot"))
-        )
+        _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
         .groupBy(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
@@ -2245,35 +1913,8 @@ def q_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import luby_mis
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
     und = (
-        e0.crossJoin(F.broadcast(tot))
-        .where(
-            (F.col("src") != F.col("dst"))
-            & (F.col("w") * F.col("n") >= F.col("tot"))
-        )
+        _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
@@ -2409,26 +2050,9 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
     w = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(
-            F.col("c_nationkey").alias("p"), F.col("s_nationkey").alias("a")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
+        _trade_edges(_trade_lines(spark, sf_dir))
+        .select(F.col("src").alias("p"), F.col("dst").alias("a"), "w")
         .localCheckpoint()  # both rank relations read it
     )
     # pr/ar feed ONLY the fused prar checkpoint below — no per-relation
@@ -2515,21 +2139,16 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-unroll oracle's extra rounds are no-ops, hashes agree).
     # (A 2-rounds-per-action variant was measured SLOWER here — the
     # doubled per-block plan analysis outweighed the saved job, and
-    # block-granular convergence pays 2 extra no-op rounds; inner stays
-    # a knob for bigger markets.)
-    inner = 1
-    n_blocks = loop_rounds((_GS_ROUNDS + inner - 1) // inner)
+    # block-granular convergence pays 2 extra no-op rounds.)
     converged = False
     prev_n = -1
     # Every per-round relation is bounded by |prar| (the truncated
     # preference lists). Restoring the setting after the loop is safe:
-    # every loop-state relation is checkpoint-materialized inside the
-    # block, so the (lazy) final projection computes the same rows.
+    # every loop-state relation is checkpoint-materialized in its
+    # round, so the (lazy) final projection computes the same rows.
     with loop_shuffle_partitions(prar.sparkSession, prar.count()):
-        for _ in range(n_blocks):
-            eng_n = eng
-            for _ in range(inner):
-                eng_n = gs_round(eng_n)
+        for _ in range(loop_rounds(_GS_ROUNDS)):
+            eng_n = gs_round(eng)
             bar_n = eng_n.select("a", F.col("ark").alias("bar_ark"))
             doomed = (
                 prar.join(F.broadcast(bar_n), "a")

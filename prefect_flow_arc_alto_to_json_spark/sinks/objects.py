@@ -71,13 +71,12 @@ def _default_s3_client_factory():
 def write_json_objects(
     df: DataFrame,
     target: str,
-    key_col: str = "s3_key",
-    json_col: str = "json",
     client_factory=None,
     statements: Sequence[tuple] = (),
 ) -> None:
-    """Write each row's ``json_col`` as one object named ``key_col``, then
-    run ``statements`` for the partition's rows.
+    """Write each row's ``json`` as one object named ``s3_key`` (the two
+    columns ``transform`` makes), then run ``statements`` for the
+    partition's rows.
 
     ``target``: ``/local/dir`` or ``s3://bucket/prefix``.
 
@@ -124,7 +123,7 @@ def write_json_objects(
     def write_partition(batches: Iterator) -> Iterator:
         client, written = open_client(), []
         for batch in batches:
-            keys, docs = batch.column(key_col).to_pylist(), batch.column(json_col).to_pylist()
+            keys, docs = batch.column("s3_key").to_pylist(), batch.column("json").to_pylist()
             for key, doc in zip(keys, docs):
                 put(client, key, _pretty_json(doc))
             if statements:
@@ -134,8 +133,8 @@ def write_json_objects(
             run_statement(connection_factory, sql, params)
         return iter(())  # no rows out: the noop write only drives the partitions
 
-    out = df.select(*dict.fromkeys([key_col, json_col, *param_cols]))
-    writer = out.mapInArrow(write_partition, out.select(key_col).schema)
+    out = df.select(*dict.fromkeys(["s3_key", "json", *param_cols]))
+    writer = out.mapInArrow(write_partition, out.select("s3_key").schema)
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     with scoped_conf(df.sparkSession, batch_key, WRITER_BATCH_ROWS):
         writer.write.format("noop").mode("overwrite").save()

@@ -192,6 +192,27 @@ def test_scc_first_peel_hand_graph(spark):
     assert out[8] == (7, -1)
 
 
+def test_trade_edges_match_sql_edges(spark, sf_dir):
+    """The one Spark trade-graph builder equals the one SQL definition,
+    ``_SQL_EDGES``, that every trade-graph oracle embeds — checked
+    directly, not only through the queries built on both."""
+    from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _SQL_EDGES,
+        _trade_edges,
+        _trade_lines,
+    )
+
+    from .oracle_harness import compare, duck_con
+
+    con = duck_con(sf_dir)
+    try:
+        n_edges = con.execute(f"SELECT COUNT(*) FROM ({_SQL_EDGES})").fetchone()[0]
+        assert n_edges > 0, "vacuous: no trade edges"
+        compare(_trade_edges(_trade_lines(spark, sf_dir)), con, _SQL_EDGES, "trade_edges")
+    finally:
+        con.close()
+
+
 def test_scc_trade_rounds_reach_fixpoint(spark):
     """The registered query runs 4+4 rounds; a deeper run must agree —
     the fixed-round contract is only honest if the fixpoint is reached."""
@@ -199,32 +220,19 @@ def test_scc_trade_rounds_reach_fixpoint(spark):
         scc_first_peel,
     )
     from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _strong_edges,
+        _trade_edges,
+        _trade_lines,
         q_scc_trade,
     )
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         base = sorted(map(tuple, q_scc_trade(spark, sf_dir).collect()))
-        # rebuild the same sparsified edges, run deeper
-        from prefect_flow_arc_alto_to_json_spark.sources import load_table
-
-        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-        e0 = (
-            li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-            .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-            .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-            .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-            .agg(F.count(F.lit(1)).alias("w"))
+        # the query's own strong-route edges, run deeper
+        edges = _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
+        deep = sorted(
+            map(tuple, scc_first_peel(edges.select("src", "dst"), rounds=7).collect())
         )
-        tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
-        edges = (
-            e0.crossJoin(F.broadcast(tot))
-            .where((F.col("src") != F.col("dst")) & (F.col("w") * F.col("n") >= F.col("tot")))
-            .select("src", "dst")
-        )
-        deep = sorted(map(tuple, scc_first_peel(edges, rounds=7).collect()))
         assert base == deep, sf_dir
 
 
@@ -300,25 +308,16 @@ def test_ktruss_hand_graph_and_fixpoint(spark):
     assert ktruss_edges(edges, k=4, rounds=2).count() == 0
     # registered-depth fixpoint on the actual trade construction
     from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _trade_edges,
+        _trade_lines,
         q_ktruss_trade,
     )
 
     base = sorted(map(tuple, q_ktruss_trade(spark, "/root/testdata/sf0.001").collect()))
-    # deeper: rebuild with rounds=4 via the operator on the same edges
-    from prefect_flow_arc_alto_to_json_spark.sources import load_table
+    # deeper: the operator on the query's own trade edges, more rounds
     from pyspark.sql import Window as W
 
-    cust = load_table(spark, "/root/testdata/sf0.001", "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, "/root/testdata/sf0.001", "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, "/root/testdata/sf0.001", "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e0 = _trade_edges(_trade_lines(spark, "/root/testdata/sf0.001"))
     rn = F.row_number().over(W.partitionBy("src").orderBy(F.col("w").desc(), "dst"))
     top3 = (
         e0.where(F.col("src") != F.col("dst"))
@@ -474,29 +473,20 @@ def test_betweenness_depth_cap_and_identity(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
-    from prefect_flow_arc_alto_to_json_spark.sources import load_table
+    from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _strong_edges,
+        _trade_edges,
+        _trade_lines,
+    )
 
     out = {**QUERIES, **EXTRA_QUERIES}["q_betweenness_trade"](spark, sf_dir)
     rows = out.collect()
     assert rows and all(r["bc_micro"] >= 0 for r in rows)
     assert any(r["bc_micro"] > 0 for r in rows), "vacuous: no broker nodes"
 
-    # rebuild the sparsified edges and run the BFS one level past the cap
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
+    # the query's own sparsified edges; run the BFS one level past the cap
     e = (
-        e0.crossJoin(F.broadcast(tot))
-        .where((F.col("src") != F.col("dst")) & (F.col("w") * F.col("n") >= F.col("tot")))
+        _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
         .select("src", "dst")
         .localCheckpoint()
     )
@@ -534,29 +524,20 @@ def test_matching_axioms(spark, sf_dir):
         dominant_edge_matching,
     )
     from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
-    from prefect_flow_arc_alto_to_json_spark.sources import load_table
+    from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _strong_edges,
+        _trade_edges,
+        _trade_lines,
+    )
 
     rows = {**QUERIES, **EXTRA_QUERIES}["q_graph_matching"](spark, sf_dir).collect()
     assert rows, "vacuous: nothing matched"
     nodes = [x for r in rows for x in (r["a"], r["b"])]
     assert len(nodes) == len(set(nodes)), "matched edges share endpoints"
 
-    # rebuild the canonical thresholded edges (the query's own build)
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
+    # the query's own thresholded edges, made undirected as it does
     und = (
-        e0.crossJoin(F.broadcast(tot))
-        .where((F.col("src") != F.col("dst")) & (F.col("w") * F.col("n") >= F.col("tot")))
+        _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
         .groupBy(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .agg(F.sum("w").cast("long").alias("w"))
     )
@@ -586,28 +567,19 @@ def test_luby_mis_axioms(spark, sf_dir):
 
     from prefect_flow_arc_alto_to_json_spark.operators.graph import luby_mis
     from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
-    from prefect_flow_arc_alto_to_json_spark.sources import load_table
+    from prefect_flow_arc_alto_to_json_spark.plans.graph_queries import (
+        _strong_edges,
+        _trade_edges,
+        _trade_lines,
+    )
 
     rows = {**QUERIES, **EXTRA_QUERIES}["q_luby_mis"](spark, sf_dir).collect()
     mis = {r["node"] for r in rows}
     assert len(mis) == len(rows), "a node admitted twice"
 
-    # rebuild the same mean-thresholded undirected edge set
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = e0.agg(F.sum("w").alias("tot"), F.count(F.lit(1)).alias("n"))
+    # the query's own mean-thresholded edges, made undirected as it does
     und = (
-        e0.crossJoin(F.broadcast(tot))
-        .where((F.col("src") != F.col("dst")) & (F.col("w") * F.col("n") >= F.col("tot")))
+        _strong_edges(_trade_edges(_trade_lines(spark, sf_dir)))
         .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
     )
